@@ -5,16 +5,16 @@ import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.streaming.DataDrivenWindow
+import graft.streaming.{DataDrivenWindow, StreamingCompat}
 import graft.streaming.DataDrivenWindow.CompatPoint
 
 /** Batch form of the reference's exact data-driven windowing
   * (R11–R14): `events` rows are lifted into the canonical DataPoint
   * envelope (names/values parallel string arrays, DataPoint.cs:25-28),
-  * demuxed with groupByKey, and each key's event-time-ordered sequence
-  * is replayed through DataDrivenWindow.replay — the same function the
-  * Structured Streaming wrapper uses, so batch and stream cannot
-  * diverge.
+  * demuxed by grouping on the key column, and each key's
+  * event-time-ordered sequence is replayed through
+  * DataDrivenWindow.replay — the same function the Structured
+  * Streaming wrapper uses, so batch and stream cannot diverge.
   *
   * Oracled since r8: the per-key batch recurrence (start-advance scan,
   * enqueue, at-most-one add-then-check drain per 100-event batch,
@@ -44,22 +44,15 @@ object CompatOps {
 
   def compatDatadrivenWindow(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pts = Tables.events(s, dir)
+    val uid = col("user_id").cast("string")
+    val pts = StreamingCompat.points(Tables.events(s, dir)
       .select(
-        col("user_id").cast("string").as("uid"),
-        col("ts_us"), col("event_id"),
-        col("event_type"),
-        col("value").cast("string").as("value_str"))
-      .as[(String, Long, Long, String, String)]
-      .map { case (uid, tsUs, eventId, eventType, valueStr) =>
-        CompatPoint(
-          key = uid, // reference key = "{SessionId}:{Values[1]}" (cs:180)
-          tsUs = tsUs, seq = eventId,
-          deviceId = s"dev-$uid", sessionId = uid,
-          names = Seq("value", "player", "type"),
-          values = Seq(valueStr, uid, eventType))
-      }
-    pts.groupByKey(_.key)
+        uid.as("key"), // reference key = "{SessionId}:{Values[1]}" (cs:180)
+        col("ts_us").as("tsUs"), col("event_id").as("seq"),
+        concat(lit("dev-"), uid).as("deviceId"), uid.as("sessionId"),
+        array(lit("value"), lit("player"), lit("type")).as("names"),
+        array(col("value").cast("string"), uid, col("event_type")).as("values")))
+    pts.groupBy(col("key")).as[String, CompatPoint]
       .flatMapGroups { (_, it: Iterator[CompatPoint]) =>
         // reference sorts each batch by Timestamp before demux (cs:35);
         // replay in 100-event micro-batches — the reference's real

@@ -181,8 +181,14 @@ object DeltaWrite {
     * race, so two replays of the same micro-batch racing each other
     * commit exactly one. */
   def append(spark: SparkSession, df: DataFrame, root: String,
-             txn: Option[(String, Long)] = None): Long = {
-    val st = writableState(spark, root)
+             txn: Option[(String, Long)] = None): Long =
+    appendTo(spark, df, root, txn, writableState(spark, root))
+
+  /** [[append]] against `st`, a state the caller already folded and
+    * checked with [[checkWritable]]. */
+  private def appendTo(spark: SparkSession, df: DataFrame, root: String,
+                       txn: Option[(String, Long)],
+                       st: DeltaRead.TableState): Long = {
     def alreadyApplied(s: DeltaRead.TableState): Boolean =
       txn.exists { case (app, v) => s.txns.get(app).exists(_ >= v) }
     if (alreadyApplied(st)) return st.version
@@ -240,11 +246,12 @@ object DeltaWrite {
   def appendSink(root: String, appId: String): (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val st = DeltaRead.state(spark, root, Long.MaxValue)
+      val st = DeltaRead.state(spark, root, Long.MaxValue) // one fold per batch
       if (st.txns.get(appId).exists(_ >= batchId))
         batch.foreach(_ => ()) // replayed: table no-op, state stores commit
       else
-        append(spark, batch.toDF(), root, txn = Some((appId, batchId)))
+        appendTo(spark, batch.toDF(), root, Some((appId, batchId)),
+          checkWritable(st, root))
     }
 
   /** Replace the table's entire contents with `df` (same schema rules
@@ -878,11 +885,14 @@ object DeltaWrite {
     }
   }
 
+  /** Hadoop configuration for the driver-side footer reads. Built once:
+    * each `new Configuration()` re-parses Hadoop's XML defaults. */
+  private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
+
   /** Physical row count from one parquet footer (metadata-only). */
   private def physicalRows(p: Path): Long = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toString),
-      new org.apache.hadoop.conf.Configuration())
+      new org.apache.hadoop.fs.Path(p.toString), footerConf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try r.getRecordCount finally r.close()
   }
@@ -1097,8 +1107,11 @@ object DeltaWrite {
     * writes proceed iff every listed writerFeature is in
     * [[SupportedWriterFeatures]]. */
   private def writableState(spark: SparkSession, root: String)
+      : DeltaRead.TableState =
+    checkWritable(DeltaRead.state(spark, root, Long.MaxValue), root)
+
+  private def checkWritable(st: DeltaRead.TableState, root: String)
       : DeltaRead.TableState = {
-    val st = DeltaRead.state(spark, root, Long.MaxValue)
     require(st.minWriter <= 7,
       s"Delta table at $root needs minWriterVersion=${st.minWriter}; the " +
         "protocol defines writer versions up to 7 — refusing an unknown one")
@@ -1405,8 +1418,7 @@ object DeltaWrite {
   private def fileStats(p: Path, dataSchema: StructType): Map[String, Any] = {
     import org.apache.parquet.column.statistics._
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toString),
-      new org.apache.hadoop.conf.Configuration())
+      new org.apache.hadoop.fs.Path(p.toString), footerConf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
       val blocks = r.getFooter.getBlocks.asScala.toSeq

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.streaming.DataDrivenWindow.{CompatPoint, CompatRow}
+import graft.streaming.StreamingCompat
 
 /** The reference's ingest + egress surface, Spark-first:
   *
@@ -107,23 +108,15 @@ object JsonEvents {
     * same windows. The window shuffle is on key, which the compat
     * pipeline regroups by anyway. */
   def toCompatPoints(spark: SparkSession, clean: DataFrame): Dataset[CompatPoint] = {
-    import spark.implicits._
     val seqW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("key"))
       .orderBy(col("tsUs"), sha2(col("raw"), 256))
-    clean.select(
+    StreamingCompat.points(clean.select(
       col("key"),
       unix_micros(col("timestamp")).as("tsUs"),
       col("deviceId"), col("sessionId"), col("names"), col("values"),
       col("raw"))
-      .withColumn("seq", row_number().over(seqW).cast("long"))
-      .select(col("key"), col("tsUs"), col("seq"),
-        col("deviceId"), col("sessionId"), col("names"), col("values"))
-      .as[(String, Long, Long, String, String, Seq[String], Seq[String])]
-      .map { case (key, tsUs, seq, dev, sess, names, values) =>
-        CompatPoint(key, tsUs, seq, dev, sess,
-          Option(names).getOrElse(Seq.empty), Option(values).getOrElse(Seq.empty))
-      }
+      .withColumn("seq", row_number().over(seqW).cast("long")))
   }
 
   /** R23: window rows → the reference's output JSON (cs:152-161). */

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.streaming.DataDrivenWindow.CompatPoint
+import graft.streaming.StreamingCompat
 
 /** Configurable streaming-source wiring — the R1 ingest element
   * (the reference consumes JSON event blobs from an Event Hub trigger,
@@ -86,9 +87,8 @@ object StreamSource {
   /** Raw JSON surface → typed per-key points for the compat pipeline
     * (StreamingCompat.windows). Malformed blobs are dropped here; use
     * JsonEvents.parse on a batch capture for the dead-letter split. */
-  def compatPoints(spark: SparkSession, raw: DataFrame): Dataset[CompatPoint] = {
-    import spark.implicits._
-    raw
+  def compatPoints(spark: SparkSession, raw: DataFrame): Dataset[CompatPoint] =
+    StreamingCompat.points(raw
       .select(col("seq"), from_json(col("value"), JsonEvents.schema,
         Map("mode" -> "PERMISSIVE",
           "columnNameOfCorruptRecord" -> "_corrupt_record")).as("p"))
@@ -100,13 +100,7 @@ object StreamSource {
         col("p.DeviceId").as("deviceId"),
         col("p.SessionId").as("sessionId"),
         col("p.Names").as("names"),
-        col("p.Values").as("values"))
-      .as[(String, Long, Long, String, String, Seq[String], Seq[String])]
-      .map { case (key, tsUs, seq, dev, sess, names, values) =>
-        CompatPoint(key, tsUs, seq, dev, sess,
-          Option(names).getOrElse(Seq.empty), Option(values).getOrElse(Seq.empty))
-      }
-  }
+        col("p.Values").as("values")))
 
   /** Raw JSON surface → the `(user_id long, ts timestamp, value
     * double)` post-parse projection StreamingWindows consumes.
