@@ -1,8 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.Bridge
+import graft.functions.FromJsonUtf8
 import graft.streaming.DataDrivenWindow.{CompatPoint, CompatRow}
 import graft.streaming.StreamingCompat
 
@@ -17,7 +19,8 @@ import graft.streaming.StreamingCompat
   *  - R2 parse: JSON → canonical DataPoint envelope (DataPoint.cs:8-28).
   *  - R4 dead-letter: malformed records are split out (not dropped
   *    silently — the reference logs them, cs:184-190) via PERMISSIVE
-  *    mode's corrupt-record column.
+  *    mode's corrupt-record column. `envelope` is the one parse of
+  *    the ingest path; StreamSource's stream projections use it too.
   *  - R3 key synthesis: key = "{SessionId}:{Values[1]}" — the
   *    reference's "total hack" player-id assumption (cs:179-181),
   *    0-based Values[1] = element_at(..., 2).
@@ -38,6 +41,37 @@ object JsonEvents {
     StructField("Values", ArrayType(StringType)),
     StructField("_corrupt_record", StringType)))
 
+  /** The envelope of raw JSON `value`: the struct
+    * `from_json(value, schema, PERMISSIVE)` gives, parsed by one
+    * native expression from the record's UTF-8 bytes
+    * ([[graft.functions.FromJsonUtf8]]). This is the one parse of the
+    * ingest path; it needs no SQL parser. */
+  def envelope(value: Column): Column =
+    Bridge.column(FromJsonUtf8(Bridge.expression(value), schema))
+
+  /** `raw`'s `keep` columns plus its envelope as `p`. */
+  private[sources] def parsed(raw: DataFrame, keep: Column*): DataFrame =
+    raw.select(keep :+ envelope(col("value")).as("p"): _*)
+
+  /** A parsed event is dead when it is malformed or has no Timestamp
+    * (SafelyConvertToDataPoint's null, cs:172-191). */
+  private[sources] val dead: Column =
+    col("p._corrupt_record").isNotNull || col("p.Timestamp").isNull
+
+  /** R3: key = "{SessionId}:{Values[1]}" (cs:179-181). */
+  private[sources] val key: Column =
+    concat_ws(":", col("p.SessionId"), element_at(col("p.Values"), 2))
+
+  private val event: Seq[Column] = Seq(
+    col("p.Timestamp").as("timestamp"),
+    col("p.DeviceId").as("deviceId"),
+    col("p.SessionId").as("sessionId"),
+    col("p.SensorType").as("sensorType"),
+    col("p.Names").as("names"),
+    col("p.Values").as("values"),
+    key.as("key"),
+    col("value").as("raw"))
+
   /** Parse raw JSON events (column `value: string`) into the typed
     * envelope + demux key; malformed records go to the second return
     * (dead letter), matching SafelyConvertToDataPoint's (null, log)
@@ -46,24 +80,8 @@ object JsonEvents {
     * events in the clean side (they parsed) and let the caller decide,
     * mirroring the "total hack" fragility without crashing the scan. */
   def parse(raw: DataFrame): (DataFrame, DataFrame) = {
-    val parsed = raw.select(col("value"), from_json(col("value"), schema,
-      Map("mode" -> "PERMISSIVE",
-        "columnNameOfCorruptRecord" -> "_corrupt_record")).as("p"))
-    val ok = parsed
-      .where(col("p._corrupt_record").isNull && col("p.Timestamp").isNotNull)
-      .select(
-        col("p.Timestamp").as("timestamp"),
-        col("p.DeviceId").as("deviceId"),
-        col("p.SessionId").as("sessionId"),
-        col("p.SensorType").as("sensorType"),
-        col("p.Names").as("names"),
-        col("p.Values").as("values"),
-        concat_ws(":", col("p.SessionId"), element_at(col("p.Values"), 2)).as("key"),
-        col("value").as("raw"))
-    val dead = parsed
-      .where(col("p._corrupt_record").isNotNull || col("p.Timestamp").isNull)
-      .select(col("value"))
-    (ok, dead)
+    val p = parsed(raw, col("value"))
+    (p.where(!dead).select(event: _*), p.where(dead).select(col("value")))
   }
 
   /** `parse` with SINGLE-PASS ingest metrics attached via the observe
@@ -74,27 +92,14 @@ object JsonEvents {
     * replacement.) Read `obs.get` AFTER an action on the clean frame. */
   def parseObserved(raw: DataFrame): (DataFrame, DataFrame, org.apache.spark.sql.Observation) = {
     val obs = org.apache.spark.sql.Observation("ingest")
-    val parsed = raw.select(col("value"), from_json(col("value"), schema,
-      Map("mode" -> "PERMISSIVE",
-        "columnNameOfCorruptRecord" -> "_corrupt_record")).as("p"))
-      .withColumn("is_dead",
-        col("p._corrupt_record").isNotNull || col("p.Timestamp").isNull)
+    val p = parsed(raw, col("value"))
+      .withColumn("is_dead", dead)
       .observe(obs,
         count(lit(1)).as("n_total"),
         count(when(!col("is_dead"), 1)).as("n_clean"),
         count(when(col("is_dead"), 1)).as("n_dead"))
-    val ok = parsed.where(!col("is_dead"))
-      .select(
-        col("p.Timestamp").as("timestamp"),
-        col("p.DeviceId").as("deviceId"),
-        col("p.SessionId").as("sessionId"),
-        col("p.SensorType").as("sensorType"),
-        col("p.Names").as("names"),
-        col("p.Values").as("values"),
-        concat_ws(":", col("p.SessionId"), element_at(col("p.Values"), 2)).as("key"),
-        col("value").as("raw"))
-    val dead = parsed.where(col("is_dead")).select(col("value"))
-    (ok, dead, obs)
+    (p.where(!col("is_dead")).select(event: _*),
+      p.where(col("is_dead")).select(col("value")), obs)
   }
 
   /** Clean parsed events → Dataset[CompatPoint] for the window
@@ -116,14 +121,14 @@ object JsonEvents {
       unix_micros(col("timestamp")).as("tsUs"),
       col("deviceId"), col("sessionId"), col("names"), col("values"),
       col("raw"))
-      .withColumn("seq", row_number().over(seqW).cast("long")))
+      .withColumn("seq", row_number().over(seqW).cast(LongType)))
   }
 
   /** R23: window rows → the reference's output JSON (cs:152-161). */
   def toOutputJson(spark: SparkSession, rows: Dataset[CompatRow]): Dataset[String] = {
     import spark.implicits._
     rows.select(to_json(struct(
-      expr("timestamp_micros(tsUs)").as("ts"),
+      timestamp_micros(col("tsUs")).as("ts"),
       col("deviceId").as("deviceid"),
       col("sessionId").as("sessionid"),
       col("sessionStart").as("sessionstart"),

@@ -1,7 +1,8 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.io.InputStream
+import java.nio.channels.{Channels, FileChannel}
+import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util
 
 import scala.jdk.CollectionConverters._
@@ -53,13 +54,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * ~one batch into the sink. With admission control the start is
   * always the offset-log truth, so no regression is representable.
   *
-  * Scale notes: the driver touches only file METADATA (name + line
-  * count, once at stream init); rows are read by executors, each
-  * reader scanning just its [start,end) slice via the per-file
-  * spans. Readers use local-FS line streams — the replay corpus is a
-  * test/dev artifact by definition (LoadGen writes it); a cluster
-  * connector would swap the two Files.lines calls for the Hadoop FS
-  * API and nothing else. */
+  * Scale notes: at stream init the driver makes one counting pass
+  * over each file's bytes and keeps its line count and the byte
+  * offset of every [[ReplaySource.Stride]]-th line. Rows are read by
+  * executors: a reader seeks to the recorded offset at or below its
+  * [start, end) slice, passes fewer than `Stride` lines and emits the
+  * slice's lines as their raw bytes (`UTF8String.fromBytes`, no
+  * decode and re-encode). Lines split where `Files.lines` splits
+  * them (`\n`, `\r`, `\r\n`), so `seq` is unchanged; unlike
+  * `Files.lines`, a line that is not valid UTF-8 is delivered as is
+  * rather than failing the task. Readers open local files — the
+  * replay corpus is a test/dev artifact by definition (LoadGen writes
+  * it); a cluster connector would swap the two local opens for the
+  * Hadoop FS API and nothing else. */
 class ReplaySource extends TableProvider with DataSourceRegister {
 
   override def shortName(): String = "graft-replay"
@@ -76,9 +83,17 @@ object ReplaySource {
   val schema: StructType = new StructType()
     .add("value", StringType).add("seq", LongType)
 
-  /** (file path, line count) per corpus file, lexicographic order —
-    * the global-sequence index. */
-  def index(dir: String): Seq[(String, Long)] = {
+  /** Line starts are recorded every `Stride` lines, so a reader seeks
+    * to within `Stride` lines of its slice. */
+  val Stride = 1024
+
+  /** One corpus file: its line count and the byte offset of every
+    * `Stride`-th line (`starts(k)` is where line `k * Stride` begins). */
+  case class CorpusFile(path: String, lines: Long, starts: Array[Long])
+
+  /** The corpus files in lexicographic name order — the global-sequence
+    * index — from one counting pass over their bytes. */
+  def index(dir: String): Seq[CorpusFile] = {
     val ls = Files.list(Paths.get(dir)) // closed below — a bare
     // .iterator leaks the directory fd (the r12 EMFILE lesson)
     val names =
@@ -88,9 +103,78 @@ object ReplaySource {
         .toSeq.sortBy(_.getFileName.toString)
       finally ls.close()
     names.map { p =>
-      val s = Files.lines(p, StandardCharsets.UTF_8)
-      try (p.toString, s.count()) finally s.close()
+      val in = Files.newInputStream(p)
+      try {
+        val lines = new LineBytes(in)
+        val starts = Array.newBuilder[Long]
+        var n = 0L
+        while (lines.next(keep = false)) {
+          if (n % Stride == 0) starts += lines.start
+          n += 1
+        }
+        CorpusFile(p.toString, n, starts.result())
+      } finally in.close()
     }
+  }
+}
+
+/** The lines of a byte stream, split where `BufferedReader.readLine`
+  * (and so `Files.lines`) splits text: `\n`, `\r` and `\r\n` end a line,
+  * and a last line without a terminator counts when it is not empty.
+  * No byte is decoded: a UTF-8 multi-byte sequence never holds a
+  * `\n` or `\r` byte, so the split is the same as on the decoded
+  * text. `bufSize` is the read buffer's size. */
+private[sources] final class LineBytes(in: InputStream, bufSize: Int = 1 << 16) {
+  private val buf = new Array[Byte](bufSize)
+  private var pos = 0
+  private var lim = 0
+  private var base = 0L // stream position of buf(0)
+  private var afterCr = false
+
+  /** Stream position of the line the last `next` found. */
+  var start: Long = -1L
+  /** Its bytes, when that `next` was asked to keep them. */
+  var line: Array[Byte] = null
+
+  private def fill(): Boolean = {
+    base += lim
+    pos = 0
+    lim = math.max(0, in.read(buf))
+    lim > 0
+  }
+
+  private def more: Boolean = pos < lim || fill()
+
+  /** Advances to the next line; false at the end of the stream. */
+  def next(keep: Boolean): Boolean = {
+    if (afterCr && more && buf(pos) == '\n') pos += 1 // the \n of a \r\n
+    afterCr = false
+    if (!more) return false
+    start = base + pos
+    var acc: java.io.ByteArrayOutputStream = null
+    var done = false
+    while (!done) {
+      var i = pos
+      while (i < lim && buf(i) != '\n' && buf(i) != '\r') i += 1
+      val ended = i < lim
+      if (keep) {
+        if (ended && acc == null) line = java.util.Arrays.copyOfRange(buf, pos, i)
+        else {
+          if (acc == null) acc = new java.io.ByteArrayOutputStream()
+          acc.write(buf, pos, i - pos)
+        }
+      }
+      if (ended) {
+        afterCr = buf(i) == '\r'
+        pos = i + 1
+        done = true
+      } else {
+        pos = lim
+        done = !fill() // an unterminated last line
+      }
+    }
+    if (keep && acc != null) line = acc.toByteArray
+    true
   }
 }
 
@@ -118,17 +202,20 @@ private case class ReplayOffset(rows: Long) extends Offset {
   override def json(): String = rows.toString
 }
 
-/** Contiguous global-row range [start, end) plus its per-file spans
-  * (file, skipLines, takeLines). */
-private case class ReplayPartition(start: Long,
-    spans: Seq[(String, Long, Long)]) extends InputPartition
+/** The part of one corpus file a partition reads: seek to byte
+  * `seek`, pass `skip` lines (fewer than [[ReplaySource.Stride]]),
+  * then read `take` lines. */
+private case class Span(path: String, seek: Long, skip: Long, take: Long)
+
+/** Contiguous global-row range [start, end) plus its per-file spans. */
+private case class ReplayPartition(start: Long, spans: Seq[Span]) extends InputPartition
 
 private class ReplayMicroBatchStream(dir: String, rowsPerBatch: Long,
                                      numPartitions: Int)
     extends MicroBatchStream with SupportsAdmissionControl {
 
   private val files = ReplaySource.index(dir)
-  private val total = files.map(_._2).sum
+  private val total = files.map(_.lines).sum
 
   override def initialOffset(): Offset = ReplayOffset(0L)
 
@@ -168,15 +255,19 @@ private class ReplayMicroBatchStream(dir: String, rowsPerBatch: Long,
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
-  /** Map global range [lo, hi) to per-file (path, skip, take) spans. */
-  private def spansFor(lo: Long, hi: Long): Seq[(String, Long, Long)] = {
+  /** Map global range [lo, hi) to per-file spans. */
+  private def spansFor(lo: Long, hi: Long): Seq[Span] = {
     var base = 0L
-    val out = Seq.newBuilder[(String, Long, Long)]
-    files.foreach { case (path, n) =>
+    val out = Seq.newBuilder[Span]
+    files.foreach { f =>
       val s = math.max(lo, base)
-      val e = math.min(hi, base + n)
-      if (e > s) out += ((path, s - base, e - s))
-      base += n
+      val e = math.min(hi, base + f.lines)
+      if (e > s) {
+        val skip = s - base
+        out += Span(f.path, f.starts((skip / ReplaySource.Stride).toInt),
+          skip % ReplaySource.Stride, e - s)
+      }
+      base += f.lines
     }
     out.result()
   }
@@ -204,29 +295,38 @@ private class ReplayMicroBatchStream(dir: String, rowsPerBatch: Long,
         val rp = p.asInstanceOf[ReplayPartition]
         new PartitionReader[InternalRow] {
           private var seq = rp.start - 1
-          // Track the Stream behind the current span so it is ALWAYS
-          // closed — when the span drains (advancing the flatMap) and
-          // in close() (a task that stops consuming early, e.g. a
-          // limit, would otherwise leak one OS file handle per
-          // partition per micro-batch for the life of the replay).
-          private var open: java.util.stream.Stream[String] = null
+          // The channel behind the current span is ALWAYS closed — when
+          // the span drains and in close() (a task that stops consuming
+          // early, e.g. a limit, would otherwise leak one OS file handle
+          // per partition per micro-batch for the life of the replay).
+          private var open: FileChannel = null
           private def closeOpen(): Unit =
             if (open != null) { open.close(); open = null }
-          private val lines = rp.spans.iterator.flatMap {
-            case (path, skip, take) =>
-              closeOpen()
-              val s = Files.lines(Paths.get(path), StandardCharsets.UTF_8)
-              open = s
-              s.skip(skip).limit(take).iterator.asScala
+          private val spans = rp.spans.iterator
+          private var lines: LineBytes = null
+          private var left = 0L // lines still to read from the open span
+          private def openSpan(sp: Span): Unit = {
+            closeOpen()
+            open = FileChannel.open(Paths.get(sp.path), StandardOpenOption.READ)
+            open.position(sp.seek)
+            lines = new LineBytes(Channels.newInputStream(open))
+            var k = 0L
+            while (k < sp.skip && lines.next(keep = false)) k += 1
+            left = sp.take
           }
           override def next(): Boolean = {
-            val has = lines.hasNext
+            var has = false
+            while (!has && (left > 0 || spans.hasNext)) {
+              if (left == 0) openSpan(spans.next())
+              else if (lines.next(keep = true)) { left -= 1; has = true }
+              else left = 0 // the file ended early
+            }
             if (!has) closeOpen()
             has
           }
           override def get(): InternalRow = {
             seq += 1
-            InternalRow(UTF8String.fromString(lines.next()), seq)
+            InternalRow(UTF8String.fromBytes(lines.line), seq)
           }
           override def close(): Unit = closeOpen()
         }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 import graft.streaming.DataDrivenWindow.CompatPoint
 import graft.streaming.StreamingCompat
 
@@ -52,8 +53,8 @@ object StreamSource {
       concat(lit("sess-"), pmod(counter, lit(8))).as("SessionId"),
       lit("rate").as("SensorType"),
       array(lit("speed"), lit("player")).as("Names"),
-      array(pmod(counter, lit(100)).cast("string"),
-        pmod(counter, lit(8)).cast("string")).as("Values")))
+      array(pmod(counter, lit(100)).cast(StringType),
+        pmod(counter, lit(8)).cast(StringType)).as("Values")))
 
   /** Load `format` with `options` and normalize to
     * `(value string, seq long)`. */
@@ -63,7 +64,7 @@ object StreamSource {
     format match {
       case "kafka" =>
         // binary key/value; offset is monotone per partition
-        src.select(col("value").cast("string").as("value"),
+        src.select(col("value").cast(StringType).as("value"),
           col("offset").as("seq"))
       case "rate" | "rate-micro-batch" =>
         // built-in generator (timestamp, value) → the reference's JSON
@@ -79,7 +80,7 @@ object StreamSource {
         // text/socket/json-file/... : expect a string-able `value`
         // column; derive seq from content (stable across runs, unlike
         // monotonically_increasing_id's partition-layout dependence)
-        src.select(col("value").cast("string").as("value"))
+        src.select(col("value").cast(StringType).as("value"))
           .withColumn("seq", pmod(xxhash64(col("value")), lit(1000000007L)))
     }
   }
@@ -88,13 +89,10 @@ object StreamSource {
     * (StreamingCompat.windows). Malformed blobs are dropped here; use
     * JsonEvents.parse on a batch capture for the dead-letter split. */
   def compatPoints(spark: SparkSession, raw: DataFrame): Dataset[CompatPoint] =
-    StreamingCompat.points(raw
-      .select(col("seq"), from_json(col("value"), JsonEvents.schema,
-        Map("mode" -> "PERMISSIVE",
-          "columnNameOfCorruptRecord" -> "_corrupt_record")).as("p"))
-      .where(col("p._corrupt_record").isNull && col("p.Timestamp").isNotNull)
+    StreamingCompat.points(JsonEvents.parsed(raw, col("seq"))
+      .where(!JsonEvents.dead)
       .select(
-        concat_ws(":", col("p.SessionId"), element_at(col("p.Values"), 2)).as("key"),
+        JsonEvents.key.as("key"),
         unix_micros(col("p.Timestamp")).as("tsUs"),
         col("seq"),
         col("p.DeviceId").as("deviceId"),
@@ -108,15 +106,11 @@ object StreamSource {
     * numeric, else a stable hash of the synthesized key; value is the
     * measurement (Values[0]). */
   def events(spark: SparkSession, raw: DataFrame): DataFrame =
-    raw
-      .select(from_json(col("value"), JsonEvents.schema,
-        Map("mode" -> "PERMISSIVE",
-          "columnNameOfCorruptRecord" -> "_corrupt_record")).as("p"))
-      .where(col("p._corrupt_record").isNull && col("p.Timestamp").isNotNull)
+    JsonEvents.parsed(raw)
+      .where(!JsonEvents.dead)
       .select(
-        coalesce(element_at(col("p.Values"), 2).cast("long"),
-          pmod(xxhash64(concat_ws(":", col("p.SessionId"),
-            element_at(col("p.Values"), 2))), lit(1000000L))).as("user_id"),
+        coalesce(element_at(col("p.Values"), 2).cast(LongType),
+          pmod(xxhash64(JsonEvents.key), lit(1000000L))).as("user_id"),
         col("p.Timestamp").as("ts"),
-        element_at(col("p.Values"), 1).cast("double").as("value"))
+        element_at(col("p.Values"), 1).cast(DoubleType).as("value"))
 }

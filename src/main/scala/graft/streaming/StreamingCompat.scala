@@ -4,7 +4,7 @@ import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.{array, coalesce, col, expr}
+import org.apache.spark.sql.functions.{array, coalesce, col, timestamp_micros}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{ArrayType, StringType}
 import graft.streaming.DataDrivenWindow._
@@ -164,7 +164,7 @@ object StreamingCompat {
                  ttlUs: Long, delay: String = "0 seconds"): Dataset[CompatRow] = {
     import spark.implicits._
     points
-      .withColumn("evt_time", expr("timestamp_micros(tsUs)"))
+      .withColumn("evt_time", timestamp_micros(col("tsUs")))
       .withWatermark("evt_time", delay)
       .groupBy(col("key")).as[String, CompatPoint]
       .flatMapGroupsWithState[TtlState, CompatRow](
