@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
 /** Bench harness: every SparkEntry query against SPARK_GRAFT_SF_DIR,
@@ -26,24 +27,27 @@ object Bench {
   private def loadAvg(): Double =
     try scala.io.Source.fromFile("/proc/loadavg").mkString
       .split("\\s+")(0).toDouble
-    catch { case _: Throwable => -1.0 }
+    catch { case NonFatal(_) => -1.0 }
   private def jvmCount(): Long =
     try {
       import scala.jdk.StreamConverters._
       ProcessHandle.allProcesses().toScala(Seq)
         .count(_.info().command().map[Boolean](_.contains("java")).orElse(false))
         .toLong
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadStart = loadAvg()
     val jvmsStart = jvmCount()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(32) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
@@ -66,11 +70,11 @@ object Bench {
     def releaseLeakedBlocks(): Unit =
       try spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
 
     // Warm-up: one window-agg over events, one hash-agg over lineitem.
     Seq("q_demux_window_avg", "q_groupby_agg").foreach { n =>
-      try run(n) catch { case _: Throwable => () }
+      try run(n) catch { case NonFatal(_) => () }
     }
     releaseLeakedBlocks()
 
@@ -86,7 +90,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try { run(name); true }
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             if (!errors.contains(name)) errors += name
             System.err.println(
               s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
@@ -161,7 +165,7 @@ object Bench {
       java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full_latest.json")),
       line + "\n")
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] full-artifact write failed: $e") }
     spark.stop()
   }

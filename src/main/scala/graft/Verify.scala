@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -50,7 +51,7 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // release pinned checkpoint frames the finished query leaked —
@@ -59,7 +60,7 @@ object Verify {
       // its own pins from parquet regardless)
       try spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -849,6 +849,9 @@ object LlmOps {
         .observe(obs, count(when(col("chg"), lit(1))).as("n_changed"))
         .drop("chg"))
       labels = next
+      // n_changed is reliable only as zero vs nonzero: with a reliable
+      // checkpoint dir, an eager checkpoint runs the plan twice (count
+      // job + write job) and the observed count can double
       converged = obs.get("n_changed").asInstanceOf[Long] == 0L
       iter += 1
     }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 
 import scala.collection.immutable.ListMap
@@ -1061,7 +1061,8 @@ object DeltaWrite {
     val cp = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), cpT)
     val tmp = log.resolve(s".cp_${UUID.randomUUID()}")
-    cp.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    cp.coalesce(1).write.options(LocalFs.WriterOptions).mode("overwrite")
+      .parquet(tmp.toString)
     val part = {
       val ls = Files.list(tmp)
       try ls.iterator().asScala
@@ -1342,7 +1343,8 @@ object DeltaWrite {
     }
     Files.createDirectories(Paths.get(root))
     val stg = Paths.get(root, s".graft-stage-${UUID.randomUUID()}")
-    val writer = physDf.write.mode("errorifexists")
+    val writer = physDf.write.options(LocalFs.WriterOptions)
+      .mode("errorifexists")
     (if (physPartitionBy.nonEmpty) writer.partitionBy(physPartitionBy: _*)
      else writer).parquet(stg.toString)
 
@@ -1516,14 +1518,7 @@ object DeltaWrite {
     val log = Paths.get(root, "_delta_log")
     Files.createDirectories(log)
     val body = actions.map(Json.render).mkString("", "\n", "\n")
-    val tmp = log.resolve(s".c$v.${UUID.randomUUID()}.tmp")
-    Files.writeString(tmp, body, StandardOpenOption.CREATE_NEW)
-    try {
-      Files.createLink(log.resolve(f"$v%020d.json"), tmp)
-      Some(v)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => None
-    } finally Files.deleteIfExists(tmp)
+    Option.when(LocalFs.writeOnce(log.resolve(f"$v%020d.json"), body))(v)
   }
 
   /** A lost commit's staged data files are unreachable (no add action

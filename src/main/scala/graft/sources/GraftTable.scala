@@ -241,13 +241,9 @@ object GraftTable {
     // so releasing the lock is harmless — claims conflict on
     // `published` first.)
     try {
-      val tmp = manifestDir(root).resolve(s".v${s.version}.${UUID.randomUUID}.tmp")
-      Files.writeString(tmp, render(s), StandardOpenOption.CREATE_NEW)
-      try Files.createLink(manifestPath(root, s.version), tmp)
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
+      if (!LocalFs.writeOnce(manifestPath(root, s.version), render(s)))
         throw new ConcurrentWriteException(
           s"version ${s.version} was published concurrently at $root")
-      } finally Files.deleteIfExists(tmp)
     } catch { case e: Throwable =>
       Files.deleteIfExists(lock)
       throw e
@@ -267,7 +263,8 @@ object GraftTable {
       Files.createDirectories(dataDir(root))
       val name = s"part-${UUID.randomUUID}.parquet"
       val tmp = dataDir(root).resolve(s".$name.tmp").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      df.coalesce(1).write.options(LocalFs.WriterOptions).mode("overwrite")
+        .parquet(tmp)
       val part = listDir(Paths.get(tmp))(
         _.find(_.getFileName.toString.endsWith(".parquet")))
         .getOrElse(sys.error(s"no parquet part under $tmp"))
@@ -1290,7 +1287,7 @@ object GraftTable {
           !pinned(m.group(1).toInt))
       }.map(Files.delete).size)
     // Crashed-publish staging residue (ADVICE r12): a hard crash
-    // between writeString(.vN.<uuid>.tmp) and the ATOMIC_MOVE leaves
+    // between writeString(.vN.json.<uuid>.tmp) and the link leaves
     // the staging file forever — its dotted name matches neither the
     // manifest regex above nor any reader's view, so nothing else
     // ever reclaims it. Age-guarded by the same retention window as

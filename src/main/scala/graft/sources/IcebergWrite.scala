@@ -352,7 +352,8 @@ object IcebergWrite {
                            idSchema: StructType, root: String)
       : Option[StagedFile] = {
     val stg = Paths.get(root, s".iceberg-del-${UUID.randomUUID()}")
-    spark.createDataFrame(rows.rdd, idSchema).write.parquet(stg.toString)
+    spark.createDataFrame(rows.rdd, idSchema).write
+      .options(LocalFs.WriterOptions).parquet(stg.toString)
     val staged = {
       val walk = Files.walk(stg)
       try walk.iterator().asScala.filter(p =>
@@ -945,7 +946,7 @@ object IcebergWrite {
     val base = spark.createDataFrame(
       df.toDF(idSchema.fieldNames.toIndexedSeq: _*).rdd, idSchema)
     if (partFields.isEmpty)
-      base.write.parquet(stg.toString)
+      base.write.options(LocalFs.WriterOptions).parquet(stg.toString)
     else {
       // identity sources must STAY in the data files (the spec stores
       // them as ordinary columns), but Spark's partitionBy CONSUMES
@@ -954,7 +955,8 @@ object IcebergWrite {
       // full-width parquet inside
       val dup = partFields.foldLeft(base)((d, p) =>
         d.withColumn("__gp_" + p.name, col(s"`${p.name}`")))
-      dup.write.partitionBy(partFields.map("__gp_" + _.name): _*)
+      dup.write.options(LocalFs.WriterOptions)
+        .partitionBy(partFields.map("__gp_" + _.name): _*)
         .parquet(stg.toString)
     }
     val staged = {
@@ -1299,16 +1301,8 @@ object IcebergWrite {
                              meta: Map[String, Any]): Option[Int] = {
     val metaDir = Paths.get(root, "metadata")
     Files.createDirectories(metaDir)
-    val tmp = metaDir.resolve(s".v$v.${UUID.randomUUID()}.tmp")
-    Files.writeString(tmp, Json.render(meta), StandardOpenOption.CREATE_NEW)
-    val won =
-      try {
-        Files.createLink(metaDir.resolve(s"v$v.metadata.json"), tmp)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      } finally Files.deleteIfExists(tmp)
-    if (!won) None
+    if (!LocalFs.writeOnce(metaDir.resolve(s"v$v.metadata.json"),
+        Json.render(meta))) None
     else {
       val hintTmp = metaDir.resolve(s".hint.${UUID.randomUUID()}.tmp")
       Files.writeString(hintTmp, v.toString, StandardOpenOption.CREATE_NEW)

@@ -38,6 +38,13 @@ import graft.streaming.StreamingCompat
   * (kafka offset, rate counter) and a content hash otherwise — it only
   * breaks equal-timestamp ties downstream, so any deterministic value
   * works; what matters is that it is NOT partition-layout-dependent.
+  *
+  * `raw` also makes [[LocalCheckpointFileManager]] the session's
+  * checkpoint file manager (`spark.sql.streaming.checkpointFileManagerClass`)
+  * unless the session already names one; a value the user set wins. It
+  * handles `file:` checkpoint locations without starting a process per
+  * file and gives every other scheme Spark's default manager. The
+  * setting stays on the session for later streams.
   */
 object StreamSource {
 
@@ -60,6 +67,7 @@ object StreamSource {
     * `(value string, seq long)`. */
   def raw(spark: SparkSession, format: String,
           options: Map[String, String] = Map.empty): DataFrame = {
+    LocalCheckpointFileManager.install(spark)
     val src = spark.readStream.format(format).options(options).load()
     format match {
       case "kafka" =>
