@@ -1,6 +1,5 @@
 package graft
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
 
 /** Bench harness: every SparkEntry query against SPARK_GRAFT_SF_DIR,
   * one JSON line out. Methodology (VERDICT r01 item 9, r03 item 3):
@@ -40,19 +39,9 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadStart = loadAvg()
     val jvmsStart = jvmCount()
-    val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(32) { v =>
-      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
-    }
+    val cpus = Session.envPositiveInt("SPARK_GRAFT_CPUS", 32)
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toLong)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(s"local[$cpus]", cpus)
 
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.streaming.SoakHarness
 
 /** Throughput soak main at the driver's bench shape (local[32]) —
@@ -17,18 +16,12 @@ object Soak {
     val keys = args.lift(0).map(_.toInt).getOrElse(1000)
     val hz = args.lift(1).map(_.toInt).getOrElse(100)
     val batches = args.lift(2).map(_.toInt).getOrElse(30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.envPositiveInt("SPARK_GRAFT_CPUS", 32)
     // state-store commit overhead scales with partition count while
     // 1000 keys parallelize fine across few partitions — default the
     // streaming shuffle narrower than the batch bench's 32
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val parts = Session.envPositiveInt("SPARK_GRAFT_PARTS", 8)
+    val spark = Session.start(s"local[$cpus]", parts)
     val bar = keys.toLong * hz
     var ok = true
     // third variant: the RocksDB state store — the production setting

@@ -34,6 +34,16 @@ object Tables {
     spark.read.parquet(s"$dir/$name.parquet")
   }
 
+  /** The pin: materialize an intermediate once, so every plan that
+    * references it reads the stored rows instead of re-deriving them
+    * (Spark has no common-subplan elimination). Reliable `checkpoint`
+    * when the context has a checkpoint dir, else `localCheckpoint`,
+    * whose blocks Spark stores MEMORY_AND_DISK. Both are eager. The
+    * README's "Pins" section states the rule. */
+  def pin(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
+    else df.localCheckpoint(true)
+
   /** events with event-time as epoch microseconds (`ts_us: long`).
     *
     * Adaptive to the driver testdata's physical `ts` type, which has

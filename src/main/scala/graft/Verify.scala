@@ -1,13 +1,12 @@
 package graft
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.envPositiveInt("SPARK_GRAFT_CPUS", 32)
     // Input-size-aware shuffle-partition default (r10, replacing the
     // manual SPARK_GRAFT_PARTS lever): partitions scale with the
     // corpus — one per ~32 MB of on-disk parquet (≈128 MB in memory
@@ -25,15 +24,8 @@ object Verify {
       finally ls.close()
     }
     val parts = math.min(4096L,
-      math.max(cpus.toLong, inputBytes / (32L << 20) + 1)).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      math.max(cpus.toLong, inputBytes / (32L << 20) + 1)).toInt
+    val spark = Session.start(s"local[$cpus]", parts)
     // SPARK_GRAFT_EXTRA_CONF="k=v;k=v" → runtime session confs, so a
     // gate can flip production-shape switches (e.g.
     // spark.graft.dedup.materialize=true) without code edits.

@@ -3,6 +3,7 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{conv, sha2, substring}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -11,7 +12,7 @@ import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The portable 60-bit hash (LlmOps.portableHash — first 15 hex chars
+/** The portable 60-bit hash (PortableHashes.hash — first 15 hex chars
   * of sha256, ≡ DuckDB `CAST('0x' || substring(sha256(s), 1, 15) AS
   * BIGINT)`) over every element of an array<string>, as ONE native
   * expression with an optional modulus folded in.
@@ -111,6 +112,18 @@ case class PortableHashes(child: Expression, mod: Long)
 }
 
 object PortableHashes {
+  /** The repo's portable 60-bit hash of one string: the first 15 hex
+    * chars of sha256, parsed base-16. DuckDB twin: `CAST('0x' ||
+    * substring(sha256(s), 1, 15) AS BIGINT)`. Two forms of one
+    * definition, so each call site keeps the plan it has: `hash` for
+    * Column pipelines, `hashSql` for `expr`/`s.sql` templates and HOF
+    * lambda bodies (`x` is a SQL expression). */
+  def hash(c: Column): Column =
+    conv(substring(sha2(c, 256), 1, 15), 16, 10).cast("long")
+
+  def hashSql(x: String): String =
+    s"cast(conv(substring(sha2($x, 256), 1, 15), 16, 10) as bigint)"
+
   /** Shared scalar core: top 60 bits of sha256, optional modulus. */
   private[functions] def hash60(md: MessageDigest, s: UTF8String,
                                 mod: Long): Long = {

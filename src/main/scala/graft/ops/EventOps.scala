@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Det, Tables}
 import graft.Det._
+import graft.functions.PortableHashes
 
 /** Group 1 — the reference's streaming semantics in batch-replay form,
   * over the driver's `events` table.
@@ -648,10 +649,8 @@ object EventOps {
   def lateEvents(s: SparkSession, dir: String): DataFrame = {
     val base = events(s, dir)
       .select(col("event_id"), col("event_type"), col("ts_us"))
-      .withColumn("arr_us", col("ts_us") +
-        expr("""cast(conv(substring(sha2(concat('late:',
-          cast(event_id as string)), 256), 1, 15), 16, 10) as bigint)
-          % 30000000""".replaceAll("\n\\s*", " ")))
+      .withColumn("arr_us", col("ts_us") + expr(PortableHashes.hashSql(
+        "concat('late:', cast(event_id as string))") + " % 30000000"))
       .withColumn("mnt", expr("arr_us div 60000000"))
     val offW = Window.orderBy(col("mnt")).rowsBetween(Window.unboundedPreceding, -1)
     val offs = base.groupBy(col("mnt")).agg(max(col("ts_us")).as("bmax"))
@@ -723,11 +722,8 @@ object EventOps {
     // events, but within one event the 32 draws are an affine chain of
     // one hash, which can shift CI coverage slightly (ADVICE r7)
     val repMeans = e
-      .withColumn("h", expr(
-        """cast(conv(substring(sha2(concat('bs:',
-          |cast(event_id as string)), 256),
-          |1, 15), 16, 10) as bigint) % 2147483647""".stripMargin
-          .replaceAll("\n", " ")))
+      .withColumn("h", expr(PortableHashes.hashSql(
+        "concat('bs:', cast(event_id as string))") + " % 2147483647"))
       .select(col("event_type"), col("yu"), col("h"),
         explode(expr(s"sequence(0, ${reps - 1})")).as("r"))
       .withColumn("u", expr(
@@ -777,9 +773,8 @@ object EventOps {
     val d38 = (c: Column) => c.cast("decimal(38,0)")
     val g = events(s, dir)
       .select(col("event_type"),
-        expr("""cast(conv(substring(sha2(concat('exp:',
-          | cast(user_id as string)), 256), 1, 15), 16, 10) as bigint)
-          | % 2""".stripMargin.replaceAll("\n", "")).as("cohort"),
+        expr(PortableHashes.hashSql(
+          "concat('exp:', cast(user_id as string))") + " % 2").as("cohort"),
         expr("cast(floor(value * cast(1000000 as double)) as bigint)")
           .as("yu"))
       .groupBy(col("event_type"), col("cohort"))
@@ -1111,9 +1106,6 @@ object EventOps {
     * while `ts_us div 3.6e9` spreads a 30-day corpus over ~720
     * monotone buckets and stays grid-bounded at decade spans. */
   def lagAutocorr(s: SparkSession, dir: String): DataFrame = {
-    val reliable = s.sparkContext.getCheckpointDir.isDefined
-    def pin(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
     // pin the ranked frame (4 narrow columns + rank): withLags
     // references it twice (main + carry), and unpinned each side
     // re-ran the events scan + two-phase rank (8 scans in the r15
@@ -1122,7 +1114,7 @@ object EventOps {
       events(s, dir).select(col("event_type"), col("event_id"), col("ts_us"),
         expr("cast(floor(value * cast(1000000 as double)) as bigint)").as("vu")),
       Seq("event_type"), "ts_us", Seq(col("event_id")), "vu", 3, "x",
-      bucketOverride = Some(expr("ts_us div 3600000000")), pin = pin)
+      bucketOverride = Some(expr("ts_us div 3600000000")), pin = Tables.pin)
     val sums = (1 to 3).flatMap { k =>
       Seq(count(col(s"x$k")).cast("long").as(s"n$k"),
         sum(expr(s"cast(x$k as decimal(38,0))")).as(s"sx$k"),
@@ -1689,10 +1681,7 @@ object EventOps {
   def markovStationary(s: SparkSession, dir: String): DataFrame = {
     val byUser = Window.partitionBy(col("user_id"))
       .orderBy(col("ts_us"), col("event_id"))
-    val reliable = s.sparkContext.getCheckpointDir.isDefined
-    def pin(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
-    val trans = pin(events(s, dir)
+    val trans = Tables.pin(events(s, dir)
       .select(col("user_id"), col("ts_us"), col("event_id"),
         col("event_type").as("from_type"))
       .withColumn("to_type", lead(col("from_type"), 1).over(byUser))
@@ -1716,7 +1705,7 @@ object EventOps {
     // lines / 216 exchanges for ~10 rows of state), so planning and
     // codegen dwarfed the data work. Each pin is a trivial job over a
     // grid-bounded frame; the plan is now linear in iterations.
-    val mass0p = pin(mass0)
+    val mass0p = Tables.pin(mass0)
     val stepped = (1 to 4).foldLeft(mass0p) { (m, _) =>
       val flow = m.join(transOut, m("event_type") === transOut("from_type"))
         .groupBy(col("to_type").as("event_type"))
@@ -1725,7 +1714,7 @@ object EventOps {
       val kept = m.join(broadcast(out),
           m("event_type") === out("from_type"), "left_anti")
         .select(col("event_type"), col("mass").as("inflow"))
-      pin(flow.union(kept)
+      Tables.pin(flow.union(kept)
         .groupBy(col("event_type"))
         .agg(sum(col("inflow")).cast("long").as("mass")))
     }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.Det._
+import graft.functions.PortableHashes
 
 /** Group 3 — LLM-training-data-pipeline operators over `documents` and
   * `embeddings` (SURVEY.md §2.C group 3; north-star mandate). The
@@ -28,16 +29,6 @@ object LlmOps {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables(s, dir, n)
-
-  /** Portable 60-bit hash both engines agree on:
-    * first 15 hex chars of sha256, parsed base-16.
-    * DuckDB twin: CAST('0x' || substring(sha256(s),1,15) AS BIGINT). */
-  private def portableHash(c: Column): Column =
-    conv(substring(sha2(c, 256), 1, 15), 16, 10).cast("long")
-
-  /** Same hash as a SQL fragment for use inside HOF lambdas. */
-  private[ops] def portableHashSql(x: String): String =
-    s"cast(conv(substring(sha2($x, 256), 1, 15), 16, 10) as bigint)"
 
   // ------------------------------------------------------------ text stats
 
@@ -233,7 +224,7 @@ object LlmOps {
       .where(col("quality_u") >= 600000L)
     val dedupW = Window.partitionBy(col("nh")).orderBy(col("doc_id"))
     val stratW = Window.partitionBy(col("lang"))
-      .orderBy(portableHash(col("doc_id").cast("string")) % 1000L, col("doc_id"))
+      .orderBy(PortableHashes.hash(col("doc_id").cast("string")) % 1000L, col("doc_id"))
     scored
       .withColumn("dr", row_number().over(dedupW)).where(col("dr") === 1)
       .withColumn("sr", row_number().over(stratW)).where(col("sr") <= 30)
@@ -335,7 +326,7 @@ object LlmOps {
     * ride the candidate-pair frame only. */
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
     val minBands = 2
-    val isDelta = (c: Column) => portableHash(c.cast("string")) % 10L === 0L
+    val isDelta = (c: Column) => PortableHashes.hash(c.cast("string")) % 10L === 0L
     val banded = bandedSigs(s, dir)
     val delta = banded.where(isDelta(col("doc_id")))
       .select(col("band"), col("sig"), col("doc_id").as("doc_a"))
@@ -478,15 +469,12 @@ object LlmOps {
     * contract makes each graph query re-derive [[minhashDedup]]'s
     * pairs in-plan (driver parquet is the only input); a real
     * deployment derives the candidate frame ONCE per corpus snapshot,
-    * checkpoints it (reliable when a checkpoint dir exists, local
-    * otherwise), and runs clusters/pagerank/triangles/reach/consensus
-    * against the materialized frame. SharedCandidateFrameSpec measures
-    * the saving and pins answer-identity vs the re-deriving forms. */
-  def candidateFrame(s: SparkSession, dir: String): DataFrame = {
-    val pairs = minhashDedup(s, dir)
-    if (s.sparkContext.getCheckpointDir.isDefined) pairs.checkpoint(eager = true)
-    else pairs.localCheckpoint(true)
-  }
+    * pins it ([[graft.Tables.pin]]), and runs
+    * clusters/pagerank/triangles/reach/consensus against the
+    * materialized frame. SharedCandidateFrameSpec measures the saving
+    * and pins answer-identity vs the re-deriving forms. */
+  def candidateFrame(s: SparkSession, dir: String): DataFrame =
+    Tables.pin(minhashDedup(s, dir))
 
   /** Conf-gated STANDING candidate frame (r9, VERDICT item 2): with
     * `spark.graft.dedup.materialize=true` the whole graph family
@@ -787,13 +775,11 @@ object LlmOps {
     * diameter(G) rounds (LSH components are near-cliques, so 2-4 in
     * practice). Each round is one shuffle-join; the edge list and each
     * round's labels are checkpointed so the lineage (and the LSH
-    * subplan) is materialized once, not replayed per round. When the
-    * session has a checkpoint dir configured
-    * (`sparkContext.setCheckpointDir`) the checkpoints are RELIABLE
-    * (survive executor loss — what a real cluster run wants);
-    * otherwise they fall back to executor-memory localCheckpoint,
-    * fine for single-JVM gate runs. Graphs whose diameter exceeds the
-    * propagation cap (r3 threw here) switch to large-star/small-star
+    * subplan) is materialized once, not replayed per round. Each
+    * checkpoint is a [[graft.Tables.pin]]: reliable when the context
+    * has a checkpoint dir (survives executor loss), else a local
+    * checkpoint whose blocks spill to disk. Graphs whose diameter
+    * exceeds the propagation cap (r3 threw here) switch to large-star/small-star
     * contraction — see [[starContract]]. */
   def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     val pairs = sharedPairs(s, dir).select(col("doc_a"), col("doc_b"))
@@ -811,20 +797,15 @@ object LlmOps {
     // not the near-clique shape LSH produces, so switch algorithms
     // instead of burning a shuffle-join per extra diameter step
     val propagationCap = 8
-    // Reliable (HDFS/object-store) checkpoints when the session has a
-    // checkpoint dir; executor-memory localCheckpoint otherwise.
-    val reliable = pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
     val Seq(ca, cb) = pairs.columns.toSeq.map(pairs.col)
-    val edges = ckpt(pairs.select(ca, cb)
+    val edges = Tables.pin(pairs.select(ca, cb)
       .union(pairs.select(cb, ca))
       .toDF("src", "dst"))
     // Seed with least(id, min neighbor) — exactly the state after the
     // first propagation round over identity labels, for the price of
     // the initialization agg the identity seed needed anyway (one
     // fewer join round; near-clique LSH graphs then converge in 1-2).
-    var labels = ckpt(edges.groupBy(col("src").as("id"))
+    var labels = Tables.pin(edges.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("mn"))
       .select(col("id"), least(col("id"), col("mn")).as("lbl")))
     var converged = false
@@ -842,7 +823,7 @@ object LlmOps {
       // rule (a NULL chg — no smaller neighbor label — counts as
       // unchanged in both forms).
       val obs = org.apache.spark.sql.Observation(s"cc_changed_$iter")
-      val next = ckpt(labels.join(nbrMin, labels("id") === nbrMin("dst"), "left")
+      val next = Tables.pin(labels.join(nbrMin, labels("id") === nbrMin("dst"), "left")
         .select(labels("id"),
           least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"),
           (col("nlbl") < col("lbl")).as("chg"))
@@ -856,7 +837,7 @@ object LlmOps {
       iter += 1
     }
     if (converged) labels
-    else starContract(edges, ckpt) // high-diameter graph: O(log² n) path
+    else starContract(edges) // high-diameter graph: O(log² n) path
   }
 
   /** Large-star / small-star contraction (Kiveris et al., "Connected
@@ -876,12 +857,11 @@ object LlmOps {
     * list; edge count never grows, and every node incident to an edge
     * stays incident throughout (no satellite is ever dropped).
     *
-    * Input: the symmetric (src, dst) edge list; ckpt: the caller's
-    * checkpoint discipline (reliable on clusters, local in gate runs). */
-  private def starContract(
-      symEdges: DataFrame, ckpt: DataFrame => DataFrame): DataFrame = {
+    * Input: the symmetric (src, dst) edge list; every round's edges
+    * are pinned ([[graft.Tables.pin]]). */
+  private def starContract(symEdges: DataFrame): DataFrame = {
     val maxRounds = 60 // ~2·log₂(n) alternations observed; 60 covers any real n
-    var e = ckpt(symEdges.where(col("src") =!= col("dst"))
+    var e = Tables.pin(symEdges.where(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct())
@@ -894,7 +874,7 @@ object LlmOps {
         .union(e.select(col("b").as("u"), col("a").as("v")))
       val mins = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
         .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val ls = ckpt(sym.where(col("v") > col("u"))
+      val ls = Tables.pin(sym.where(col("v") > col("u"))
         .join(mins, "u")
         .select(col("m").as("a"), col("v").as("b"))
         .distinct())
@@ -905,7 +885,7 @@ object LlmOps {
         .where(col("a") =!= col("m"))
         .select(col("m").as("a2"), col("a").as("b2"))
       val part2 = smallMins.select(col("m").as("a2"), col("sb").as("b2"))
-      val ss = ckpt(part1.union(part2).toDF("a", "b").distinct())
+      val ss = Tables.pin(part1.union(part2).toDF("a", "b").distinct())
       // fixed point: both rewrites left the (distinct) edge set intact
       stable = ss.count() == e.count() &&
         ss.except(e).limit(1).count() == 0
@@ -933,7 +913,7 @@ object LlmOps {
   def trainTestSplit(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents")
       .select(col("lang"),
-        (portableHash(col("doc_id").cast("string")) % 100L).as("hb"),
+        (PortableHashes.hash(col("doc_id").cast("string")) % 100L).as("hb"),
         size(split(col("text"), " ")).cast("long").as("toks"))
       .withColumn("split",
         when(col("hb") < 90, "train").when(col("hb") < 95, "valid")
@@ -952,7 +932,7 @@ object LlmOps {
   def corpusMix(s: SparkSession, dir: String): DataFrame = {
     val srcNum = substring(col("source"), 4, 10).cast("long")
     val thresh = (srcNum % 4L + 1L) * 250L // target rates .25/.5/.75/1.0
-    val accepted = (portableHash(col("doc_id").cast("string")) % 1000L) < thresh
+    val accepted = (PortableHashes.hash(col("doc_id").cast("string")) % 1000L) < thresh
     t(s, dir, "documents")
       .select(col("source"), col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("toks"),
@@ -981,7 +961,7 @@ object LlmOps {
     t(s, dir, "documents")
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("w"),
-        ((portableHash(col("doc_id").cast("string")) % 1000000007L + 1L)
+        ((PortableHashes.hash(col("doc_id").cast("string")) % 1000000007L + 1L)
           .cast("double") / lit(1000000008.0)).as("u"))
       .select(col("doc_id"), col("w"), (log(col("u")) / col("w")).as("key"))
       .orderBy(col("key").desc, col("doc_id"))
@@ -1000,14 +980,14 @@ object LlmOps {
   def contamination(s: SparkSession, dir: String): DataFrame = {
     val grams = Tables.spread(s, t(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("toks"),
-        (portableHash(col("doc_id").cast("string")) % 100L).as("hb"))
+        (PortableHashes.hash(col("doc_id").cast("string")) % 100L).as("hb"))
       .where(size(col("toks")) >= 5))
       .select(col("doc_id"), col("hb"), explode(expr(
         """transform(sequence(1, size(toks) - 4),
           |  i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1), ' ',
           |              element_at(toks, i + 2), ' ', element_at(toks, i + 3), ' ',
           |              element_at(toks, i + 4)))""".stripMargin)).as("g"))
-      .select(col("doc_id"), col("hb"), portableHash(col("g")).as("gh"))
+      .select(col("doc_id"), col("hb"), PortableHashes.hash(col("g")).as("gh"))
     val train = grams.where(col("hb") < 90).select(col("gh")).distinct()
       .withColumn("hit", lit(1L))
     val test = grams.where(col("hb") >= 95)
@@ -1056,12 +1036,12 @@ object LlmOps {
     * green is the end-to-end proof, StratifiedPrefilterSpec asserts
     * filtered ≡ unfiltered + the filter sits below the window sort). */
   val StratPrefilterC = 64L
-  private val HashSpan = math.pow(2d, 60) // portableHash range [0, 2^60)
+  private val HashSpan = math.pow(2d, 60) // PortableHashes.hash range [0, 2^60)
 
   def stratifiedSample(s: SparkSession, dir: String): DataFrame = {
     val base = t(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"),
-        portableHash(concat(lit("strat:"), col("doc_id").cast("string"))).as("hk"))
+        PortableHashes.hash(concat(lit("strat:"), col("doc_id").cast("string"))).as("hk"))
     // one row per stratum; AQE broadcasts it (no hint: |langs| is
     // small but not provably bounded — SURVEY §8 rule)
     val counts = base.groupBy(col("lang")).agg(count(lit(1)).as("n_stratum"))
@@ -1094,7 +1074,7 @@ object LlmOps {
     val base = t(s, dir, "documents")
       .select(col("lang"), col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("toks"),
-        portableHash(concat(lit("pack:"), col("doc_id").cast("string"))).as("hk"))
+        PortableHashes.hash(concat(lit("pack:"), col("doc_id").cast("string"))).as("hk"))
     TwoPhaseRank.withRunningSums(base, Seq("lang"),
         Seq(col("hk"), col("doc_id")), expr("hk div 9007199254740992"),
         Seq("toks" -> "cum"))
@@ -1126,7 +1106,7 @@ object LlmOps {
   def classRebalance(s: SparkSession, dir: String): DataFrame = {
     val base = t(s, dir, "documents")
       .select(col("doc_id"), col("lang"),
-        portableHash(concat(lit("rb:"), col("doc_id").cast("string"))).as("hk"))
+        PortableHashes.hash(concat(lit("rb:"), col("doc_id").cast("string"))).as("hk"))
       .withColumn("bucket", expr("hk div 9007199254740992"))
     // class totals DERIVE from the bucketed counts (the branch
     // re-executes — no CSE — but its corpus-scale exchange stays on
@@ -1323,7 +1303,7 @@ object LlmOps {
   def dupInflation(s: SparkSession, dir: String): DataFrame =
     Tables.spread(s, t(s, dir, "documents"))
       .select(col("doc_id"), col("source"),
-        portableHash(col("text")).as("h"),
+        PortableHashes.hash(col("text")).as("h"),
         size(split(col("text"), " ")).cast("long").as("n_toks"))
       .withColumn("canon",
         min(col("doc_id")).over(Window.partitionBy(col("h"))))
@@ -1358,7 +1338,7 @@ object LlmOps {
   def datasetCard(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.spread(s, t(s, dir, "documents"))
       .select(col("doc_id"), col("source"), col("lang"),
-        portableHash(col("text")).as("h"),
+        PortableHashes.hash(col("text")).as("h"),
         size(split(col("text"), " ")).cast("long").as("n_toks"))
     val langGrid = docs.groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("c"))
@@ -1474,7 +1454,7 @@ object LlmOps {
     * sizes a ≤ 3-row broadcast. */
   def splitLeakage(s: SparkSession, dir: String): DataFrame = {
     def sp(c: Column): Column = {
-      val hb = portableHash(c.cast("string")) % 100L
+      val hb = PortableHashes.hash(c.cast("string")) % 100L
       when(hb < 90, "train").when(hb < 95, "valid").otherwise("test")
     }
     val banded = bandedSigs(s, dir)
@@ -1536,17 +1516,16 @@ object LlmOps {
   def negativeSampling(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").select(col("doc_id"), col("source"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
+    val candHash = PortableHashes.hashSql(
+      "concat(cast(anchor_id as string), '#', cast(i as string))")
     val cands = docs
-      .where(portableHash(col("doc_id").cast("string")) % 50L === 0L)
+      .where(PortableHashes.hash(col("doc_id").cast("string")) % 50L === 0L)
       .select(col("doc_id").as("anchor_id"),
         col("source").as("anchor_source"))
       .crossJoin(broadcast(n))
       .select(col("anchor_id"), col("anchor_source"),
-        posexplode(expr(
-          """transform(sequence(0, 7), i ->
-            |  cast(conv(substring(sha2(concat(cast(anchor_id as string),
-            |    '#', cast(i as string)), 256), 1, 15), 16, 10) as bigint)
-            |  % n_docs)""".stripMargin)).as(Seq("i", "cand_id")))
+        posexplode(expr(s"transform(sequence(0, 7), i -> $candHash % n_docs)"))
+          .as(Seq("i", "cand_id")))
     val wr = Window.partitionBy(col("anchor_id")).orderBy(col("i"))
     cands
       .join(docs.select(col("doc_id").as("cand_id"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Det, Tables}
 import graft.Det._
+import graft.functions.PortableHashes
 
 /** Group 2 — the relational coverage the north-star mandates ("same
   * query capabilities"): scans, every join shape, aggregation/grouping
@@ -560,14 +561,14 @@ object RelationalOps {
     * Scale shape: the mod-filter is scan-side; the per-bucket cap is
     * a rank window that Spark 4 rewrites to WindowGroupLimit — each
     * map task keeps a ≤ buckets·cap top-heap BEFORE the shuffle, so
-    * the exchange carries O(tasks·buckets·cap) rows, not corpus/mod
-    * (plan-asserted in PlanAudit). Boundaries come back as a bounded
-    * 7-element frame CROSS-joined (broadcast, 1 row) onto the scan;
+    * the exchange carries O(tasks·buckets·cap) rows, not corpus/mod.
+    * Boundaries come back as a bounded 7-element frame CROSS-joined
+    * (broadcast, 1 row) onto the scan;
     * range assignment is a projection (count of boundaries ≤ value);
     * the validation count is one ≤8-key combine shuffle. */
   def sortBoundaries(s: SparkSession, dir: String): DataFrame = {
     val (mod, buckets, cap) = sbGeometry(s)
-    val sampleKey = phSql.format("concat(l_orderkey, ':', l_linenumber)")
+    val sampleKey = hashStr("concat(l_orderkey, ':', l_linenumber)")
     val byBucket = Window.partitionBy(col("bucket"))
       .orderBy(col("h"), col("l_orderkey"), col("l_linenumber"))
     // (Deliberately NOT spread: the synthetic data carries duplicate
@@ -774,7 +775,7 @@ object RelationalOps {
           .when(col("new_text").isNotNull, lit("insert"))
           .otherwise(lit("keep")).as("op"),
         coalesce(col("base_lang"), col("chg_lang")).as("lang"),
-        expr(phSql.format("coalesce(new_text, base_text)")).as("content_h"))
+        expr(hashStr("coalesce(new_text, base_text)")).as("content_h"))
       .orderBy("doc_id")
   }
 
@@ -805,8 +806,8 @@ object RelationalOps {
       .crossJoin(truth)
   }
 
-  private val phSql =
-    "cast(conv(substring(sha2(cast(%s as string), 256), 1, 15), 16, 10) as bigint)"
+  /** [[PortableHashes.hashSql]] of the SQL expression `x` cast to string. */
+  private def hashStr(x: String): String = PortableHashes.hashSql(s"cast($x as string)")
 
   /** Bloom geometry: m = 2^20 bits (a 128 KB word array — still
     * trivially broadcastable, and the 8 probes stay far from
@@ -841,7 +842,7 @@ object RelationalOps {
              bit_or(shiftleft(cast(1 as bigint), cast(pos % 64 as int))) AS bits
       FROM (
         SELECT (h % $m + t.j * ((h div $m) % ${m - 1} + 1)) % $m AS pos
-        FROM (SELECT ${phSql.format("o_orderkey")} AS h
+        FROM (SELECT ${hashStr("o_orderkey")} AS h
               FROM orders WHERE o_totalprice > 300000.0)
         LATERAL VIEW explode(sequence(0, 7)) t AS j)
       GROUP BY pos div 64""")
@@ -856,7 +857,7 @@ object RelationalOps {
       }
       .mkString(" AND ")
     Tables.spread(s, s.table("lineitem").select(col("l_orderkey")))
-      .select(col("l_orderkey"), expr(phSql.format("l_orderkey")).as("h"))
+      .select(col("l_orderkey"), expr(hashStr("l_orderkey")).as("h"))
       .select(col("l_orderkey"),
         expr(s"h % $m").as("h1"), expr(s"(h div $m) % ${m - 1} + 1").as("h2"))
       .withColumn("bloom_mask", lit(words))
@@ -919,9 +920,6 @@ object RelationalOps {
     * apply it. */
   def approxDistinct(s: SparkSession, dir: String): DataFrame = {
     Tables.registerAll(s, dir)
-    val reliable = s.sparkContext.getCheckpointDir.isDefined
-    def pin(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
     // Collapse each key to its DISTINCT (flag, key) frame FIRST and
     // pin it (the hllSetAlgebra discipline): registers are max-folds,
     // so sketching the distinct frame gives identical registers while
@@ -930,19 +928,18 @@ object RelationalOps {
     // this also retires the old single-aggregate two-column
     // count(DISTINCT) whose Expand duplicated every input row through
     // one wide-key shuffle (the r5 plan-shape lesson).
-    pin(s.table("lineitem")
+    Tables.pin(s.table("lineitem")
         .select(col("l_returnflag"), col("l_orderkey")).distinct())
       .createOrReplaceTempView("hll_o_distinct")
-    pin(s.table("lineitem")
+    Tables.pin(s.table("lineitem")
         .select(col("l_returnflag"), col("l_partkey")).distinct())
       .createOrReplaceTempView("hll_p_distinct")
-    val ph = "cast(conv(substring(sha2(cast(%s as string), 256), 1, 15), 16, 10) as bigint)"
     def sketch(key: String, alias: String) = s"""
       ${alias}_reg AS (
         SELECT l_returnflag, h % 512 AS bucket,
                max(CASE WHEN h div 512 = 0 THEN 52
                         ELSE 52 - length(bin(h div 512)) END) AS m
-        FROM (SELECT l_returnflag, ${ph.format(key)} AS h
+        FROM (SELECT l_returnflag, ${hashStr(key)} AS h
               FROM hll_${alias}_distinct)
         GROUP BY l_returnflag, h % 512),
       ${alias}_est AS (
@@ -1528,7 +1525,6 @@ object RelationalOps {
     * both engines, so the rendering contract holds on nullable
     * columns too. */
   def tableFingerprint(s: SparkSession, dir: String): DataFrame = {
-    val ph = "cast(conv(substring(sha2(cast(%s as string), 256), 1, 15), 16, 10) as bigint)"
     def cents(c: String): Column = floor(col(c) * 100).cast("long")
     def one(name: String, cols: Seq[Column]): DataFrame =
       // NO spread here (r15 regression, VERDICT r16 item 1): the
@@ -1540,7 +1536,7 @@ object RelationalOps {
       // combine itself moves one row per partition.
       t(s, dir, name)
         .select(concat_ws("|", cols: _*).as("row_str"))
-        .select(expr(ph.format("row_str")).as("h"))
+        .select(expr(hashStr("row_str")).as("h"))
         .agg(count(lit(1)).as("n_rows"),
           expr("bit_xor(h)").as("xor_hash"),
           (sum(col("h").cast("decimal(38,0)")) %
@@ -1563,7 +1559,7 @@ object RelationalOps {
             .select(concat_ws("|", col("event_id"), col("user_id"),
               col("event_type"), col("ts_us"),
               floor(col("value") * 1000000).cast("long")).as("row_str"))
-          .select(expr(ph.format("row_str")).as("h"))
+          .select(expr(hashStr("row_str")).as("h"))
           .agg(count(lit(1)).as("n_rows"),
             expr("bit_xor(h)").as("xor_hash"),
             (sum(col("h").cast("decimal(38,0)")) %
@@ -1627,9 +1623,6 @@ object RelationalOps {
     * error (the cost the sketch avoids — dropped at scale). */
   def distinctRollup(s: SparkSession, dir: String): DataFrame = {
     Tables.registerAll(s, dir)
-    val reliable = s.sparkContext.getCheckpointDir.isDefined
-    def pin(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
     // Collapse to the DISTINCT (lang, source, token) frame FIRST and
     // pin it (the hllSetAlgebra discipline): HLL registers are
     // max-folds, so registers over the distinct frame are identical
@@ -1640,13 +1633,12 @@ object RelationalOps {
     // pinned vocabulary-bounded frame instead of re-deriving the
     // corpus explode once per reference (temp views hold plans, and
     // multi-referenced subplans re-execute — no CSE).
-    pin(Tables.spread(s, s.table("documents")
+    Tables.pin(Tables.spread(s, s.table("documents")
         .select(col("lang"), col("source"), col("text")))
       .select(col("lang"), col("source"),
         explode(split(col("text"), " ")).as("token"))
       .distinct())
       .createOrReplaceTempView("doc_tokens_distinct")
-    val ph = "cast(conv(substring(sha2(token, 256), 1, 15), 16, 10) as bigint)"
     val est = """cast(floor(
         cast(0.7213 as double)
           / (cast(1.0 as double) + cast(1.079 as double) / cast(512.0 as double))
@@ -1659,7 +1651,8 @@ object RelationalOps {
         SELECT lang, source, h % 512 AS bucket,
                max(CASE WHEN h div 512 = 0 THEN 52
                         ELSE 52 - length(bin(h div 512)) END) AS m
-        FROM (SELECT lang, source, $ph AS h FROM doc_tokens_distinct)
+        FROM (SELECT lang, source, ${PortableHashes.hashSql("token")} AS h
+              FROM doc_tokens_distinct)
         GROUP BY lang, source, h % 512),
       reg_lang AS (SELECT lang, bucket, max(m) AS m FROM reg GROUP BY lang, bucket),
       reg_all AS (SELECT bucket, max(m) AS m FROM reg_lang GROUP BY bucket),
@@ -1949,13 +1942,11 @@ object RelationalOps {
     * Scale shape: one full-outer hash join on the key + one combine to
     * the priority × class grid. */
   def snapshotDiff(s: SparkSession, dir: String): DataFrame = {
-    val ph =
-      "cast(conv(substring(sha2(cast(%s as string), 256), 1, 15), 16, 10) as bigint)"
     val base = t(s, dir, "orders").select(col("o_orderkey"),
       col("o_orderpriority"),
       expr("cast(floor(o_totalprice * cast(100 as double)) as bigint)")
         .as("cents"),
-      expr(ph.format("o_orderkey")).as("h"))
+      expr(hashStr("o_orderkey")).as("h"))
     val snapA = base.where(expr("h % 20 != 0"))
       .select(col("o_orderkey"), col("o_orderpriority"),
         col("cents").as("cents_a"))
@@ -2186,20 +2177,15 @@ object RelationalOps {
     * distinct) is the cost the sketch avoids, kept for the error
     * column. */
   def hllSetAlgebra(s: SparkSession, dir: String): DataFrame = {
-    val ph =
-      "cast(conv(substring(sha2(cast(l_partkey as string), 256), 1, 15), 16, 10) as bigint)"
-    val reliable = s.sparkContext.getCheckpointDir.isDefined
-    def pin(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
     // hash the DISTINCT (flag, key) frame once and pin it: the
     // template references it from 5 CTEs (no CSE), and the distinct
     // frame is bounded by key cardinality × |flags| — the sketch
     // input a deployment would materialize anyway
-    pin(Tables.spread(s, t(s, dir, "lineitem")
+    Tables.pin(Tables.spread(s, t(s, dir, "lineitem")
         .select(col("l_returnflag"), col("l_partkey")))
       .distinct()
       .select(col("l_returnflag").as("flag"), col("l_partkey").as("k"),
-        expr(ph).as("h")))
+        expr(hashStr("l_partkey")).as("h")))
       .createOrReplaceTempView("hll_algebra_hashed")
     s.sql(hllAlgebraSql(duck = false))
   }
@@ -2259,20 +2245,15 @@ object RelationalOps {
     * exact distinct rides along as the measured error. */
   def bottomkSketch(s: SparkSession, dir: String): DataFrame = {
     val k = 256
-    val ph =
-      "cast(conv(substring(sha2(cast(%s as string), 256), 1, 15), 16, 10) as bigint)"
-    val reliable = s.sparkContext.getCheckpointDir.isDefined
-    def pin(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
     // pinned: the distinct (flag, hash) frame is key-cardinality-sized
     // (|flags|·|distinct partkeys|) and referenced FOUR times through
     // tagged's two consumers (sk, exact) × tagged's two branches —
     // unpinned, the scan + 600k sha + distinct re-derived per
     // reference (8 parquet scans in the r15 plan)
-    val hashes = pin(Tables.spread(s, t(s, dir, "lineitem")
+    val hashes = Tables.pin(Tables.spread(s, t(s, dir, "lineitem")
         .select(col("l_returnflag"), col("l_partkey")))
       .select(col("l_returnflag").as("flag"),
-        expr(ph.format("l_partkey")).as("h"))
+        expr(hashStr("l_partkey")).as("h"))
       .distinct())
     val tagged = hashes.unionAll(
       hashes.select(lit("ALL").as("flag"), col("h")).distinct())
@@ -2311,15 +2292,13 @@ object RelationalOps {
     * join is the cost the sketch avoids (kept as the error column).
     */
   def cmJoinEstimate(s: SparkSession, dir: String): DataFrame = {
-    val ph =
-      "cast(conv(substring(sha2(cast(%s as string), 256), 1, 15), 16, 10) as bigint)"
     def sketch(df: DataFrame, key: String): DataFrame =
       // spread BEFORE the hash projection: one sha + a 4-row explode
       // per input row feeds the register combine — single-split driver
       // parquet would run that map side on one core (Tables.spread
       // scaladoc; no-op at real scale)
       Tables.spread(s, df.select(col(key)))
-        .select(expr(ph.format(key)).as("h"))
+        .select(expr(hashStr(key)).as("h"))
         .select(explode(expr(
           """transform(sequence(0, 3), r -> struct(r AS r,
             |  ((h % 2147483647) * (r + 1) + 37 * r + 101)

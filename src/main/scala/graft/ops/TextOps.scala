@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.Det._
+import graft.functions.PortableHashes
 
 /** Text-analysis operators for the LLM-data pipeline (north-star brief:
   * language-ID, quality scoring, token counting, fingerprinting, and
@@ -19,10 +20,6 @@ object TextOps {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables(s, dir, n)
-
-  /** SQL fragment: portable 60-bit hash (see LlmOps.portableHash). */
-  private def ph(x: String): String =
-    s"cast(conv(substring(sha2($x, 256), 1, 15), 16, 10) as bigint)"
 
   /** documents tokenized once: (doc_id, lang, source, text, toks).
     * Repartitioned when feeding sha-heavy stages: the driver testdata
@@ -190,7 +187,7 @@ object TextOps {
         col("doc_id"),
         regexp_count(col("dirty"), lit(EmailRe)).cast("long").as("n_emails"),
         regexp_count(col("dirty"), lit(PhoneRe)).cast("long").as("n_phones"),
-        expr(s"${ph("redacted")}").as("redacted_hash"),
+        expr(PortableHashes.hashSql("redacted")).as("redacted_hash"),
         (regexp_count(col("redacted"), lit(EmailRe)) +
           regexp_count(col("redacted"), lit(PhoneRe)) === 0).as("clean"))
       .orderBy("doc_id")
@@ -261,7 +258,7 @@ object TextOps {
   private def simhashPairs(s: SparkSession, dir: String): DataFrame = {
     val tok = tokenized(s, dir, spread = true)
       .select(col("doc_id"), explode(col("toks")).as("tk"))
-      .select(col("doc_id"), expr(ph("tk")).as("th"))
+      .select(col("doc_id"), expr(PortableHashes.hashSql("tk")).as("th"))
     val bitCols = (0 until 32).map(i =>
       sum(expr(s"if((shiftright(th, $i) & 1) = 1, 1L, -1L)")).as(s"b$i"))
     val packExpr = (0 until 32).map(i => s"if(b$i > 0, ${1L << i}L, 0L)").mkString(" + ")
@@ -270,10 +267,7 @@ object TextOps {
     // token-explode + sha + 32-sum signature aggregation runs twice.
     // The pinned frame is one (doc_id, simhash) row per document —
     // negligible storage at any scale.
-    val reliable = s.sparkContext.getCheckpointDir.isDefined
-    def pin(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
-    val sim = pin(tok.groupBy(col("doc_id"))
+    val sim = Tables.pin(tok.groupBy(col("doc_id"))
       .agg(bitCols.head, bitCols.tail: _*)
       .select(col("doc_id"), expr(s"cast($packExpr as bigint)").as("simhash")))
     val banded = sim.select(col("doc_id"), col("simhash"),
@@ -432,7 +426,7 @@ object TextOps {
         expr("slice(toks, cast(chunk_id * 24 + 1 as int), 32)").as("chunk"))
       .select(col("doc_id"), col("chunk_id"), col("start_tok"),
         size(col("chunk")).cast("long").as("n_chunk_tokens"),
-        expr(ph("concat_ws(' ', chunk)")).as("chunk_hash"))
+        expr(PortableHashes.hashSql("concat_ws(' ', chunk)")).as("chunk_hash"))
       .orderBy("doc_id", "chunk_id")
 
   /** Chunk-level exact dedup over the q_doc_chunk hashes — repeated-
@@ -721,7 +715,8 @@ object TextOps {
     val vocab = t(s, dir, "documents")
       .select(explode(split(col("text"), " ")).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-      .withColumn("h", pmod(expr(ph("concat('cm:', token)")), lit(p)))
+      .withColumn("h",
+        pmod(expr(PortableHashes.hashSql("concat('cm:', token)")), lit(p)))
     val cells = vocab.select(col("token"), col("cnt"), col("h"),
       posexplode(array((0 until 4).map(i =>
         pmod(lit(as(i)) * col("h") + lit(bs(i)), lit(p)) % w): _*))
@@ -1166,9 +1161,6 @@ object TextOps {
     * rank (oracle unchanged); the rollup is a combine to the
     * |langs|×3 grid. */
   def ccnetBuckets(s: SparkSession, dir: String): DataFrame = {
-    val reliable = s.sparkContext.getCheckpointDir.isDefined
-    def pin(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
     // The NLL domain is NARROW-BAND for the default monotoneBucket:
     // per-bigram costs are log-scale micro-units, so corpus averages
     // live inside one binary octave (~5–15e6) and bitlength+top-5-bits
@@ -1189,7 +1181,7 @@ object TextOps {
     // pin VERDICT r15 item 10 asked to retry — the r15-rejected pin
     // was the corpus-sized pre-aggregation string frame, not this.
     graft.ops.TwoPhaseRank.withRankAndCount(
-        pin(perDocNll(s, dir)), Seq("lang"), "avg_nll_micro",
+        Tables.pin(perDocNll(s, dir)), Seq("lang"), "avg_nll_micro",
         Seq(col("doc_id")), "r", "n",
         bucketOverride = Some(expr("avg_nll_micro div 2048")))
       .withColumn("bucket",
@@ -1412,7 +1404,7 @@ object TextOps {
       .select(col("doc_id"), col("n_tokens"), col("n_covered"),
         expr("1000000 * cast(n_tokens - n_covered as decimal(38,0)) div n_tokens")
           .cast("long").as("keep_ppm"),
-        expr(ph("trimmed")).as("trimmed_hash"))
+        expr(PortableHashes.hashSql("trimmed")).as("trimmed_hash"))
       .orderBy("doc_id")
   }
 
@@ -1442,15 +1434,12 @@ object TextOps {
           |      i -> concat(element_at(toks, i), ' ',
           |                  element_at(toks, i + 1)))
           |  else cast(array() as array<string>) end)""".stripMargin)).as("g"))
-    val reliable = s.sparkContext.getCheckpointDir.isDefined
-    def pin(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
     // pinned: the hashed feature stream is consumed twice (bucket
     // counts, per-doc scoring) and multi-referenced subplans
     // re-execute — unpinned, the gram explode + sha re-derives per
     // reference
-    val fb = pin(grams.select(col("doc_id"), col("lang"),
-      expr(s"${ph("g")} % 1024").as("b")))
+    val fb = Tables.pin(grams.select(col("doc_id"), col("lang"),
+      expr(s"${PortableHashes.hashSql("g")} % 1024").as("b")))
     // target and raw bucket counts in ONE combine pass (the target
     // count is a conditional sum riding the same ≤1024-key shuffle);
     // the nt/nr totals are then sums of the ≤1024-row count frame —
@@ -1868,7 +1857,7 @@ object TextOps {
     tokenized(s, dir, spread = true)
       .where(size(col("toks")) >= 3)
       .select(col("doc_id"), col("source"),
-        expr(ph("""concat(element_at(toks, 1), ' ',
+        expr(PortableHashes.hashSql("""concat(element_at(toks, 1), ' ',
           element_at(toks, 2), ' ', element_at(toks, 3))"""))
           .as("head_h"))
       .groupBy(col("head_h"))

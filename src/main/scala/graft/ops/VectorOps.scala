@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.Det._
+import graft.functions.PortableHashes
 
 /** Vector / multimodal operators for the LLM-data pipeline over
   * `embeddings` (+ `documents` for the binary-payload plumbing):
@@ -21,10 +22,6 @@ object VectorOps {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables(s, dir, n)
-
-  /** SQL fragment: portable 60-bit hash (see LlmOps.portableHash). */
-  private def ph(x: String): String =
-    s"cast(conv(substring(sha2($x, 256), 1, 15), 16, 10) as bigint)"
 
   /** Native codegen'd dot product (see graft.functions.ArrayDotProduct
     * — same left-to-right IEEE fold as DuckDB's list_reduce, so
@@ -459,7 +456,7 @@ object VectorOps {
     * shuffle. Occurrence + histogram are two combine aggs whose key
     * spaces (corpus ids appearing in ≤1000 list slots; occurrence
     * values ≤100) are collision-bounded; the occurrence frame is
-    * localCheckpointed ONCE (≤1000 rows) so the anti-hub complement
+    * pinned ONCE (≤1000 rows) so the anti-hub complement
     * row doesn't re-run the scan+window through Spark's no-CSE
     * union branches. At production scale the same audit runs on any
     * fixed query sample — hubness is a property of the space,
@@ -478,10 +475,7 @@ object VectorOps {
         r6(dot("q_emb", "c_emb") / (col("q_norm") * col("c_norm"))).as("cos"))
       .withColumn("rn", row_number().over(topW))
       .where(col("rn") <= 10)
-    val occRaw = top.groupBy(col("cid")).agg(count(lit(1)).as("occ"))
-    val occ =
-      if (s.sparkContext.getCheckpointDir.isDefined) occRaw.checkpoint(true)
-      else occRaw.localCheckpoint(true)
+    val occ = Tables.pin(top.groupBy(col("cid")).agg(count(lit(1)).as("occ")))
     val dist = occ.groupBy(col("occ")).agg(count(lit(1)).as("n_vectors"))
       .select(col("occ").as("k_occurrence"), col("n_vectors"))
     val zero = base.agg(count(lit(1)).as("n_total"))
@@ -557,7 +551,7 @@ object VectorOps {
     * path (bounded query block broadcast × one corpus scan,
     * WindowGroupLimit-pruned top-20); everything after operates on
     * (queries × 20)-row frames — pool and pairwise-sim frames are
-    * localCheckpointed ONCE (self-join no-CSE would otherwise re-run
+    * pinned ONCE (self-join no-CSE would otherwise re-run
     * the corpus scan per greedy step) and every greedy iteration
     * touches only those bounded frames. MMR's sequential greed is
     * inherently k-step; keeping each step a broadcast-size join is
@@ -579,17 +573,14 @@ object VectorOps {
       .select(col("qid"), col("cid"),
         expr("cast(round(cos * cast(1000000 as double), 0) as bigint)")
           .as("rel_ppm"))
-    val reliable = s.sparkContext.getCheckpointDir.isDefined
-    def pin(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
-    val pool = pin(poolRaw)
+    val pool = Tables.pin(poolRaw)
     val a = pool.select(col("qid"), col("cid").as("cid_a"))
       .join(base.select(col("vec_id").as("cid_a"), col("embedding").as("ea"),
         col("norm").as("na")), "cid_a")
     val b = pool.select(col("qid"), col("cid").as("cid_b"))
       .join(base.select(col("vec_id").as("cid_b"), col("embedding").as("eb"),
         col("norm").as("nb")), "cid_b")
-    val sims = pin(a.join(b, "qid")
+    val sims = Tables.pin(a.join(b, "qid")
       .where(col("cid_a") =!= col("cid_b"))
       .select(col("qid"), col("cid_a"), col("cid_b"),
         r6(dot("ea", "eb") / (col("na") * col("nb"))).as("sim"))
@@ -620,7 +611,7 @@ object VectorOps {
       // plan embeds every prior step's window+join chain and the
       // final plan re-executes them combinatorially (the frames are
       // ≤ 5 rows — the cost is plan depth and stage count, not data)
-      sel = pin(sel.unionByName(pick))
+      sel = Tables.pin(sel.unionByName(pick))
     }
     sel.select(col("qid"), col("step"), col("cid"), col("score").as("mmr_score"))
       .orderBy("qid", "step")
@@ -1038,7 +1029,7 @@ object VectorOps {
         octet_length(col("payload")).cast("long").as("n_bytes"),
         upper(substring(hex(col("payload")), 1, 16)).as("head_hex"),
         // STUB decoder output: deterministic pseudo-feature from bytes.
-        expr(s"${ph("cast(payload as string)")} % 1000").as("stub_feature"))
+        expr(s"${PortableHashes.hashSql("cast(payload as string)")} % 1000").as("stub_feature"))
       .orderBy("doc_id")
 
   /** Per-class mean embedding (label prototypes) — the pooling

@@ -37,12 +37,9 @@ object LoadGen {
     val num = args.lift(1).map(_.toLong).getOrElse(5000L)
     val intervalMs = args.lift(2).map(_.toLong).getOrElse(10L)
     val files = args.lift(3).map(_.toInt).getOrElse(4)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-loadgen")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // 200 is Spark's default; `generate` repartitions to `files` itself
+    val spark = graft.Session.start(
+      sys.env.getOrElse("SPARK_MASTER", "local[4]"), 200)
     try generate(spark, outDir, num, intervalMs, files)
     finally spark.stop()
   }

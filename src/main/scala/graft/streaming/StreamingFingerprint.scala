@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.PortableHashes
 
 /** Streaming table fingerprint — the incremental form of the batch
   * q_table_fingerprint audit fold: because both accumulators are
@@ -22,9 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object StreamingFingerprint {
 
-  private val ph =
-    "cast(conv(substring(sha2(cast(row_str as string), 256), 1, 15), 16, 10) as bigint)"
-
   /** Input columns: (event_id long, user_id long, event_type string,
     * ts_us long, value double). Output (Complete mode): one row
     * (n_rows, xor_hash, sum_hash_mod) — the running fingerprint. */
@@ -33,7 +31,7 @@ object StreamingFingerprint {
       .select(concat_ws("|", col("event_id"), col("user_id"),
         col("event_type"), col("ts_us"),
         floor(col("value") * 1000000).cast("long")).as("row_str"))
-      .select(expr(ph).as("h"))
+      .select(expr(PortableHashes.hashSql("cast(row_str as string)")).as("h"))
       .agg(count(lit(1)).as("n_rows"),
         expr("bit_xor(h)").as("xor_hash"),
         (sum(col("h").cast("decimal(38,0)")) %

@@ -4,9 +4,10 @@ import org.apache.spark.sql.functions._
 import graft.functions.PortableHashes
 
 /** Codegen-path parity for PortableHashes on a real session: the
-  * native expression must equal the SQL conv/substring/sha2 transform
-  * it replaces, element for element, including null elements, empty
-  * arrays, and the folded modulus. */
+  * native expression and the shared scalar forms (`hash`, `hashSql`)
+  * must equal the literal SQL conv/substring/sha2 reference below,
+  * element for element, including null elements, empty arrays, and
+  * the folded modulus. */
 class PortableHashesSpec extends SparkSpec {
 
   private val ph =
@@ -24,10 +25,15 @@ class PortableHashesSpec extends SparkSpec {
       PortableHashes.hashes(col("arr")).as("raw"),
       PortableHashes.hashes(col("arr"), 2147483647L).as("modded"),
       expr(s"transform(arr, x -> $ph)").as("sql_raw"),
-      expr(s"transform(arr, x -> $ph % 2147483647)").as("sql_modded"))
+      expr(s"transform(arr, x -> $ph % 2147483647)").as("sql_modded"),
+      transform(col("arr"), x => PortableHashes.hash(x)).as("shared_col"),
+      expr(s"transform(arr, x -> ${PortableHashes.hashSql("x")})")
+        .as("shared_sql"))
     got.collect().foreach { r =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](2), "raw mismatch")
       assert(r.getSeq[Long](1) == r.getSeq[Long](3), "modded mismatch")
+      assert(r.getSeq[Long](4) == r.getSeq[Long](2), "shared Column form mismatch")
+      assert(r.getSeq[Long](5) == r.getSeq[Long](2), "shared SQL form mismatch")
     }
   }
 
