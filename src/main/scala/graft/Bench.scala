@@ -7,12 +7,14 @@ import scala.util.control.NonFatal
   *    Catalyst prune final sorts/projections, under-measuring the plan;
   *  - two untimed warm-up runs absorb JVM/codegen/parquet-footer costs
   *    so per-query numbers are comparable round over round;
-  *  - each query runs SPARK_GRAFT_RUNS times (default 3) back to back
-  *    and the REPORTED number is the per-query MEDIAN — a one-off GC /
-  *    cleanup stall carried over from a neighboring query perturbs at
-  *    most one of the runs, so phantom outliers stop polluting the
-  *    recorded artifact (r2/r3 both recorded 6-8 s for q_json_extract
-  *    that re-measured at ~1 s). Raw runs are kept in a `runs` field,
+  *  - each query runs SPARK_GRAFT_RUNS times (a positive integer,
+  *    default 3; anything else stops Bench at startup with an error
+  *    naming the variable) back to back and the REPORTED number is
+  *    the per-query MEDIAN — a one-off GC / cleanup stall carried
+  *    over from a neighboring query perturbs at most one of the
+  *    runs, so phantom outliers stop polluting the recorded artifact
+  *    (r2/r3 both recorded 6-8 s for q_json_extract that re-measured
+  *    at ~1 s). Raw runs are kept in a `runs` field,
   *    emitted FIRST in the line: the driver archives a truncated
   *    stdout TAIL, so the medians/totals at the end survive;
   *  - queries run in sorted-name order (stable diffs);
@@ -40,7 +42,7 @@ object Bench {
     val loadStart = loadAvg()
     val jvmsStart = jvmCount()
     val cpus = Session.envPositiveInt("SPARK_GRAFT_CPUS", 32)
-    val nRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
+    val nRuns = Session.envPositiveInt("SPARK_GRAFT_RUNS", 3)
     val spark = Session.start(s"local[$cpus]", cpus)
 
     def run(name: String): Unit =

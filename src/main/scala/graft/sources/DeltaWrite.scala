@@ -8,6 +8,7 @@ import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -192,7 +193,7 @@ object DeltaWrite {
     def alreadyApplied(s: DeltaRead.TableState): Boolean =
       txn.exists { case (app, v) => s.txns.get(app).exists(_ >= v) }
     if (alreadyApplied(st)) return st.version
-    val aligned = align(df, st.meta)
+    val aligned = align(df, st.meta.schema)
     val adds = stage(spark, aligned, root, st.meta.partitionCols,
       mapping = mappingOf(st.meta))
     val txnActions = txn.toVector.map { case (app, v) =>
@@ -263,7 +264,7 @@ object DeltaWrite {
     val st = writableState(spark, root)
     require(st.meta.configuration.getOrElse("delta.appendOnly", "false") != "true",
       s"Delta table at $root sets delta.appendOnly=true — refusing overwrite")
-    val aligned = align(df, st.meta)
+    val aligned = align(df, st.meta.schema)
     val adds = stage(spark, aligned, root, st.meta.partitionCols,
       mapping = mappingOf(st.meta))
     val ts = System.currentTimeMillis()
@@ -421,7 +422,7 @@ object DeltaWrite {
       (p, pv, bm)
     }
     val (fullyDead, partial) = merged.partition { case (p, _, bm) =>
-      bm.cardinality == physicalRows(Paths.get(resolve(root, p)))
+      bm.cardinality == LocalFs.parquetRows(Paths.get(resolve(root, p)))
     }
 
     val ts = System.currentTimeMillis()
@@ -530,7 +531,7 @@ object DeltaWrite {
     val st = writableState(spark, root)
     val targets = st.live.filter { case (p, _) =>
       st.dvs.get(p).exists(_.cardinality.toDouble >=
-        minDeletedFraction * physicalRows(Paths.get(resolve(root, p))))
+        minDeletedFraction * LocalFs.parquetRows(Paths.get(resolve(root, p))))
     }
     if (targets.isEmpty) return st.version
     val visible = DeltaRead.plan(spark, root, st.meta, targets, st.dvs)
@@ -885,18 +886,6 @@ object DeltaWrite {
     }
   }
 
-  /** Hadoop configuration for the driver-side footer reads. Built once:
-    * each `new Configuration()` re-parses Hadoop's XML defaults. */
-  private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
-
-  /** Physical row count from one parquet footer (metadata-only). */
-  private def physicalRows(p: Path): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toString), footerConf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
-  }
-
   /** Stats for a DV-carrying add: the protocol's deletion-vector
     * writer requirements mandate `tightBounds:false` on any add whose
     * rows are partially hidden — absent, it defaults TRUE and an
@@ -1048,9 +1037,8 @@ object DeltaWrite {
     // the hint write would otherwise leave _last_checkpoint
     // permanently stale, since reruns no-op on the existing file)
     def writeHint(): Long = {
-      Files.write(log.resolve("_last_checkpoint"),
-        Json.render(ListMap("version" -> st.version, "size" -> rows.size.toLong))
-          .getBytes(StandardCharsets.UTF_8))
+      LocalFs.replaceAtomically(log.resolve("_last_checkpoint"),
+        Json.render(ListMap("version" -> st.version, "size" -> rows.size.toLong)))
       st.version
     }
     // idempotent: a checkpoint already at this version IS the folded
@@ -1060,22 +1048,13 @@ object DeltaWrite {
     if (Files.exists(target)) return writeHint()
     val cp = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), cpT)
-    val tmp = log.resolve(s".cp_${UUID.randomUUID()}")
-    cp.coalesce(1).write.options(LocalFs.WriterOptions).mode("overwrite")
-      .parquet(tmp.toString)
-    val part = {
-      val ls = Files.list(tmp)
-      try ls.iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      finally ls.close()
+    LocalFs.staged(log.resolve(s".cp_${UUID.randomUUID()}"),
+        cp.coalesce(1).write.mode("overwrite")) { parts =>
+      try Files.move(parts.head, target)
+      catch { // a concurrent checkpointer won the same version
+        case _: java.nio.file.FileAlreadyExistsException => ()
+      }
     }
-    try Files.move(part, target)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        deleteTree(tmp) // a concurrent checkpointer won the same version
-        return writeHint()
-    }
-    deleteTree(tmp)
     writeHint()
   }
 
@@ -1221,23 +1200,24 @@ object DeltaWrite {
     * present exactly once, no extras, types equal up to nullability —
     * with nullable-into-required refused (this writer will not be the
     * reason a required column holds null). */
-  private def align(df: DataFrame, meta: DeltaRead.Meta): DataFrame = {
+  private[sources] def align(df: DataFrame, table: StructType): DataFrame = {
     val have = df.schema.fields.map(f => f.name -> f).toMap
-    require(df.schema.fields.length == meta.schema.fields.length &&
-        meta.schema.fields.forall(f => have.contains(f.name)),
-      s"schema mismatch: table has ${meta.schema.fieldNames.mkString(",")}, " +
+    require(df.schema.fields.length == table.fields.length &&
+        table.fields.forall(f => have.contains(f.name)),
+      s"schema mismatch: table has ${table.fieldNames.mkString(",")}, " +
         s"data has ${df.schema.fieldNames.mkString(",")}")
-    meta.schema.fields.foreach { tf =>
+    table.fields.foreach { tf =>
       val dfF = have(tf.name)
-      // types compare METADATA-STRIPPED: a mapped table's nested
-      // fields carry columnMapping metadata the user's frame never has
+      // types compare METADATA-STRIPPED: a mapped Delta table's nested
+      // fields carry columnMapping metadata, an Iceberg table's carry
+      // field ids, and the user's frame has neither
       require(stripMeta(dfF.dataType) == stripMeta(tf.dataType),
         s"column ${tf.name}: table type ${tf.dataType.simpleString} != " +
           s"data type ${dfF.dataType.simpleString}")
       require(tf.nullable || !dfF.nullable,
         s"column ${tf.name} is required in the table but nullable in the data")
     }
-    df.select(meta.schema.fieldNames.map(col).toIndexedSeq: _*)
+    df.select(table.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   private def stripMeta(t: DataType): DataType = t match {
@@ -1343,69 +1323,58 @@ object DeltaWrite {
     }
     Files.createDirectories(Paths.get(root))
     val stg = Paths.get(root, s".graft-stage-${UUID.randomUUID()}")
-    val writer = physDf.write.options(LocalFs.WriterOptions)
-      .mode("errorifexists")
-    (if (physPartitionBy.nonEmpty) writer.partitionBy(physPartitionBy: _*)
-     else writer).parquet(stg.toString)
+    val writer = physDf.write.mode("errorifexists")
+    LocalFs.staged(stg,
+        if (physPartitionBy.nonEmpty) writer.partitionBy(physPartitionBy: _*)
+        else writer) { staged =>
+      // hive dirs cannot tell null / "" / the literal default-partition
+      // marker apart — detect the two forgeable sources and refuse
+      if (partitionBy.nonEmpty &&
+          staged.exists(p => stg.relativize(p).toString
+            .contains("__HIVE_DEFAULT_PARTITION__"))) {
+        val forged = df
+          .where(partitionBy.map(c => col(c) === "__HIVE_DEFAULT_PARTITION__" ||
+            col(c) === "").reduce(_ || _))
+        if (!forged.isEmpty)
+          sys.error("partition values \"\" or the literal " +
+            "\"__HIVE_DEFAULT_PARTITION__\" are not representable in hive " +
+            "layout (both collapse into the null marker) — refusing")
+      }
 
-    val staged = {
-      val walk = Files.walk(stg)
-      try walk.iterator().asScala.filter(p =>
-        p.getFileName.toString.endsWith(".parquet") && Files.isRegularFile(p))
-        .toVector
-      finally walk.close()
-    }
-    // hive dirs cannot tell null / "" / the literal default-partition
-    // marker apart — detect the two forgeable sources and refuse
-    if (partitionBy.nonEmpty &&
-        staged.exists(p => stg.relativize(p).toString
-          .contains("__HIVE_DEFAULT_PARTITION__"))) {
-      val forged = df
-        .where(partitionBy.map(c => col(c) === "__HIVE_DEFAULT_PARTITION__" ||
-          col(c) === "").reduce(_ || _))
-      if (!forged.isEmpty) {
-        deleteTree(stg)
-        sys.error("partition values \"\" or the literal " +
-          "\"__HIVE_DEFAULT_PARTITION__\" are not representable in hive " +
-          "layout (both collapse into the null marker) — refusing")
+      staged.map { p =>
+        val rel = stg.relativize(p)
+        val segs = rel.asScala.map(_.toString).toVector
+        val pv: ListMap[String, Any] = ListMap(segs.dropRight(1).map { seg =>
+          val eq = seg.indexOf('=')
+          require(eq > 0, s"staged path segment without col=value shape: $seg")
+          val raw = ExternalCatalogUtils.unescapePathName(seg.substring(eq + 1))
+          seg.substring(0, eq) ->
+            (if (raw == "__HIVE_DEFAULT_PARTITION__") null else raw)
+        }: _*)
+        val base =
+          if (changeData) Paths.get(root).resolve("_change_data")
+          else Paths.get(root)
+        val dest = base.resolve(rel)
+        Files.createDirectories(dest.getParent)
+        Files.move(p, dest) // unique part-<uuid> names: collision = bug
+        if (changeData)
+          ListMap[String, Any]("cdc" -> ListMap(
+            "path" -> encodePath(("_change_data" +: segs).mkString("/")),
+            "partitionValues" -> pv,
+            "size" -> Files.size(dest),
+            "dataChange" -> false))
+        else
+          ListMap[String, Any]("add" -> ListMap(
+            "path" -> encodePath(segs.mkString("/")),
+            "partitionValues" -> pv,
+            "size" -> Files.size(dest),
+            "modificationTime" -> Files.getLastModifiedTime(dest).toMillis,
+            "dataChange" -> dataChange,
+            "stats" -> Json.render(fileStats(dest,
+              StructType(physDf.schema.fields.filterNot(f =>
+                physPartitionBy.contains(f.name)))))))
       }
     }
-
-    val adds = staged.map { p =>
-      val rel = stg.relativize(p)
-      val segs = rel.asScala.map(_.toString).toVector
-      val pv: ListMap[String, Any] = ListMap(segs.dropRight(1).map { seg =>
-        val eq = seg.indexOf('=')
-        require(eq > 0, s"staged path segment without col=value shape: $seg")
-        val raw = unescapeHive(seg.substring(eq + 1))
-        seg.substring(0, eq) ->
-          (if (raw == "__HIVE_DEFAULT_PARTITION__") null else raw)
-      }: _*)
-      val base =
-        if (changeData) Paths.get(root).resolve("_change_data")
-        else Paths.get(root)
-      val dest = base.resolve(rel)
-      Files.createDirectories(dest.getParent)
-      Files.move(p, dest) // unique part-<uuid> names: collision = bug
-      if (changeData)
-        ListMap[String, Any]("cdc" -> ListMap(
-          "path" -> encodePath(("_change_data" +: segs).mkString("/")),
-          "partitionValues" -> pv,
-          "size" -> Files.size(dest),
-          "dataChange" -> false))
-      else
-        ListMap[String, Any]("add" -> ListMap(
-          "path" -> encodePath(segs.mkString("/")),
-          "partitionValues" -> pv,
-          "size" -> Files.size(dest),
-          "modificationTime" -> Files.getLastModifiedTime(dest).toMillis,
-          "dataChange" -> dataChange,
-          "stats" -> Json.render(fileStats(dest,
-            StructType(physDf.schema.fields.filterNot(f =>
-              physPartitionBy.contains(f.name)))))))
-    }
-    deleteTree(stg)
-    adds
   }
 
   /** File-skipping stats from one parquet footer — driver-side,
@@ -1419,10 +1388,7 @@ object DeltaWrite {
     * UTF-8 byte comparison, the order the stats were written under. */
   private def fileStats(p: Path, dataSchema: StructType): Map[String, Any] = {
     import org.apache.parquet.column.statistics._
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toString), footerConf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
+    LocalFs.footer(p) { r =>
       val blocks = r.getFooter.getBlocks.asScala.toSeq
       val rows = r.getRecordCount
       val chunksByCol = blocks.flatMap(_.getColumns.asScala)
@@ -1488,7 +1454,7 @@ object DeltaWrite {
         (if (mn.nonEmpty) ListMap("minValues" -> mn, "maxValues" -> mx)
         else ListMap.empty) ++
         (if (nc.nonEmpty) ListMap("nullCount" -> nc) else ListMap.empty)
-    } finally r.close()
+    }
   }
 
   private[sources] def metaData(schema: StructType, partitionBy: Seq[String],
@@ -1546,27 +1512,4 @@ object DeltaWrite {
     * '=' readable, matching what production Delta writers emit. */
   private[sources] def encodePath(rel: String): String =
     new java.net.URI(null, null, rel, null).getRawPath
-
-  /** Inverse of hive's escapePathName: %xx (two hex digits) decodes to
-    * the char; hive escapes '%' itself, so the scan is unambiguous. */
-  private def unescapeHive(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s(i) == '%' && i + 2 < s.length && isHex(s(i + 1)) && isHex(s(i + 2))) {
-        sb += Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar
-        i += 3
-      } else { sb += s(i); i += 1 }
-    }
-    sb.result()
-  }
-
-  private def isHex(c: Char): Boolean =
-    (c >= '0' && c <= '9') || (c >= 'A' && c <= 'F') || (c >= 'a' && c <= 'f')
-
-  private def deleteTree(p: Path): Unit = {
-    val walk = Files.walk(p)
-    try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-    finally walk.close()
-  }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 
 import scala.collection.immutable.ListMap
@@ -11,6 +11,7 @@ import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -351,35 +352,19 @@ object IcebergWrite {
   private def stageParquet(spark: SparkSession, rows: DataFrame,
                            idSchema: StructType, root: String)
       : Option[StagedFile] = {
-    val stg = Paths.get(root, s".iceberg-del-${UUID.randomUUID()}")
-    spark.createDataFrame(rows.rdd, idSchema).write
-      .options(LocalFs.WriterOptions).parquet(stg.toString)
-    val staged = {
-      val walk = Files.walk(stg)
-      try walk.iterator().asScala.filter(p =>
-        p.getFileName.toString.endsWith(".parquet") && Files.isRegularFile(p))
-        .toVector
-      finally walk.close()
-    }
-    val out =
-      try {
-        val src = staged.headOption.getOrElse(sys.error("no staged delete file"))
-        val rows = parquetRows(src)
-        if (rows == 0L) None
-        else {
-          val dataDir = Paths.get(root, "data")
-          Files.createDirectories(dataDir)
-          val dest = dataDir.resolve(s"delete-${UUID.randomUUID()}.parquet")
-          Files.move(src, dest)
-          Some(StagedFile(dest.toAbsolutePath.toString, Files.size(dest), rows))
-        }
-      } finally {
-        val walk = Files.walk(stg)
-        try walk.iterator().asScala.toSeq.reverse
-          .foreach(Files.deleteIfExists(_))
-        finally walk.close()
+    LocalFs.staged(Paths.get(root, s".iceberg-del-${UUID.randomUUID()}"),
+        spark.createDataFrame(rows.rdd, idSchema).write) { staged =>
+      val src = staged.headOption.getOrElse(sys.error("no staged delete file"))
+      val rows = LocalFs.parquetRows(src)
+      if (rows == 0L) None
+      else {
+        val dataDir = Paths.get(root, "data")
+        Files.createDirectories(dataDir)
+        val dest = dataDir.resolve(s"delete-${UUID.randomUUID()}.parquet")
+        Files.move(src, dest)
+        Some(StagedFile(dest.toAbsolutePath.toString, Files.size(dest), rows))
       }
-    out
+    }
   }
 
   /** Result of [[expireSnapshots]]: snapshot ids expired and the
@@ -577,7 +562,7 @@ object IcebergWrite {
       val partFields = partFieldsOf(meta, root)
       val schemaObj = currentSchemaObj(meta)
       val schema = IcebergRead.toSpark(schemaObj).asInstanceOf[StructType]
-      val aligned = align(df, schema)
+      val aligned = DeltaWrite.align(df, schema)
       val files = stage(spark, aligned, root, schema, partFields)
       val lastSeq = Json.long(meta, "last-sequence-number").getOrElse(0L)
       val seq = lastSeq + 1
@@ -945,29 +930,20 @@ object IcebergWrite {
     val stg = Paths.get(root, s".iceberg-stage-${UUID.randomUUID()}")
     val base = spark.createDataFrame(
       df.toDF(idSchema.fieldNames.toIndexedSeq: _*).rdd, idSchema)
-    if (partFields.isEmpty)
-      base.write.options(LocalFs.WriterOptions).parquet(stg.toString)
-    else {
-      // identity sources must STAY in the data files (the spec stores
-      // them as ordinary columns), but Spark's partitionBy CONSUMES
-      // its columns — so the split runs on `__gp_` DUPLICATES: one
-      // distributed job, hive-layout staging dirs carrying the tuple,
-      // full-width parquet inside
-      val dup = partFields.foldLeft(base)((d, p) =>
-        d.withColumn("__gp_" + p.name, col(s"`${p.name}`")))
-      dup.write.options(LocalFs.WriterOptions)
-        .partitionBy(partFields.map("__gp_" + _.name): _*)
-        .parquet(stg.toString)
-    }
-    val staged = {
-      val walk = Files.walk(stg)
-      try walk.iterator().asScala.filter(p =>
-        p.getFileName.toString.endsWith(".parquet") && Files.isRegularFile(p))
-        .toVector
-      finally walk.close()
-    }
-    val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
-    val out =
+    val writer =
+      if (partFields.isEmpty) base.write
+      else {
+        // identity sources must STAY in the data files (the spec stores
+        // them as ordinary columns), but Spark's partitionBy CONSUMES
+        // its columns — so the split runs on `__gp_` DUPLICATES: one
+        // distributed job, hive-layout staging dirs carrying the tuple,
+        // full-width parquet inside
+        val dup = partFields.foldLeft(base)((d, p) =>
+          d.withColumn("__gp_" + p.name, col(s"`${p.name}`")))
+        dup.write.partitionBy(partFields.map("__gp_" + _.name): _*)
+      }
+    LocalFs.staged(stg, writer) { staged =>
+      val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
       try staged.map { p =>
         // the partition tuple rides the staging dir names (__gp_c=v),
         // hive-unescaped and parsed back to the column's runtime
@@ -984,7 +960,7 @@ object IcebergWrite {
           require(raw != "__HIVE_DEFAULT_PARTITION__",
             s"partition column ${pf.name} has NULL values — an identity " +
               "partition tuple must be concrete; filter or fill first")
-          partValue(unescapeHive(raw), pf.sparkType)
+          partValue(ExternalCatalogUtils.unescapePathName(raw), pf.sparkType)
         }
         // partitioned files keep a hive-style layout under data/ (the
         // same `c=v` dirs, `__gp_` stripped) — human-readable, and
@@ -997,72 +973,15 @@ object IcebergWrite {
         Files.move(p, dest)
         moved += dest
         StagedFile(dest.toAbsolutePath.toString, Files.size(dest),
-          parquetRows(dest), partition)
+          LocalFs.parquetRows(dest), partition)
       } catch {
         case e: Throwable =>
           // a mid-map refusal (null tuple, unparsable dir) must not
           // strand already-moved files as orphans under data/
           moved.foreach(Files.deleteIfExists(_))
           throw e
-      } finally {
-        val walk = Files.walk(stg)
-        try walk.iterator().asScala.toSeq.reverse
-          .foreach(Files.deleteIfExists(_))
-        finally walk.close()
       }
-    out
-  }
-
-  /** Inverse of hive's escapePathName for staged partition dir values
-    * (the [[DeltaWrite]] idiom): %xx decodes to the char; hive
-    * escapes '%' itself, so the scan is unambiguous. */
-  private def unescapeHive(s: String): String = {
-    def isHex(c: Char) = (c >= '0' && c <= '9') ||
-      (c >= 'A' && c <= 'F') || (c >= 'a' && c <= 'f')
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s(i) == '%' && i + 2 < s.length && isHex(s(i + 1)) && isHex(s(i + 2))) {
-        sb += Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar
-        i += 3
-      } else { sb += s(i); i += 1 }
     }
-    sb.result()
-  }
-
-  private def parquetRows(p: Path): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toString),
-      new org.apache.hadoop.conf.Configuration())
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
-  }
-
-  /** Project `df` into the table's schema by NAME (same contract as
-    * [[DeltaWrite.align]]); types are compared id-stripped. */
-  private def align(df: DataFrame, table: StructType): DataFrame = {
-    def bare(t: DataType): DataType = t match {
-      case s: StructType => StructType(s.fields.map(f =>
-        StructField(f.name, bare(f.dataType), f.nullable)))
-      case a: ArrayType => a.copy(elementType = bare(a.elementType))
-      case m: MapType => m.copy(keyType = bare(m.keyType),
-        valueType = bare(m.valueType))
-      case other => other
-    }
-    val have = df.schema.fields.map(f => f.name -> f).toMap
-    require(df.schema.fields.length == table.fields.length &&
-        table.fields.forall(f => have.contains(f.name)),
-      s"schema mismatch: table has ${table.fieldNames.mkString(",")}, " +
-        s"data has ${df.schema.fieldNames.mkString(",")}")
-    table.fields.foreach { tf =>
-      val dfF = have(tf.name)
-      require(bare(dfF.dataType) == bare(tf.dataType),
-        s"column ${tf.name}: table type ${tf.dataType.simpleString} != " +
-          s"data type ${dfF.dataType.simpleString}")
-      require(tf.nullable || !dfF.nullable,
-        s"column ${tf.name} is required in the table but nullable in the data")
-    }
-    df.select(table.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   // -- avro ------------------------------------------------------------
@@ -1304,10 +1223,7 @@ object IcebergWrite {
     if (!LocalFs.writeOnce(metaDir.resolve(s"v$v.metadata.json"),
         Json.render(meta))) None
     else {
-      val hintTmp = metaDir.resolve(s".hint.${UUID.randomUUID()}.tmp")
-      Files.writeString(hintTmp, v.toString, StandardOpenOption.CREATE_NEW)
-      Files.move(hintTmp, metaDir.resolve("version-hint.text"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      LocalFs.replaceAtomically(metaDir.resolve("version-hint.text"), v.toString)
       Some(v)
     }
   }

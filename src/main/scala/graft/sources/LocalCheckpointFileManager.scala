@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.BufferedOutputStream
 import java.net.URI
-import java.nio.file.{Files, StandardCopyOption, StandardOpenOption, Path => JPath}
+import java.nio.file.{Files, StandardOpenOption, Path => JPath}
 
 import scala.util.control.NonFatal
 
@@ -20,7 +20,8 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * process per call when Hadoop's native library is absent, and whose
   * creates start a `chmod` per file. Put-if-absent publishes by
   * link(2) ([[LocalFs.publishOnce]]), which fails atomically when the
-  * file exists; Spark's default checks and then renames. It writes no
+  * file exists; Spark's default checks and then renames. Overwrites
+  * rename over the old file ([[LocalFs.replace]]). It writes no
   * `.crc` siblings; when it replaces or deletes a file it also deletes
   * the file's `.crc`, so a checkpoint the default manager started can
   * be resumed under this one and the other way round.
@@ -122,8 +123,7 @@ object LocalCheckpointFileManager {
           super.close()
           if (overwrite) {
             Files.deleteIfExists(crcOf(dst))
-            Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE,
-              StandardCopyOption.REPLACE_EXISTING)
+            LocalFs.replace(tmp, dst)
           } else if (!LocalFs.publishOnce(tmp, dst))
             throw new FileAlreadyExistsException(s"$dst already exists")
         } finally Files.deleteIfExists(tmp)

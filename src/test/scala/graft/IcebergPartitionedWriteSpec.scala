@@ -105,18 +105,20 @@ class IcebergPartitionedWriteSpec extends SparkSpec {
       "refuse; foreign non-identity specs refuse") {
     import spark.implicits._
     val root = fresh()
-    // ':' is hive-escaped in dir names — the tuple must round-trip
+    // ':', '%' and '=' are hive-escaped in dir names — the tuple must
+    // round-trip
     IcebergWrite.create(spark,
-      Seq((1L, "a:b", 1L), (2L, "c d", 2L)).toDF("id", "p", "n"), root,
+      Seq((1L, "a:b", 1L), (2L, "c d", 2L), (4L, "a%b", 4L), (5L, "k=v", 5L))
+        .toDF("id", "p", "n"), root,
       partitionBy = Seq("p"))
     val meta = metaJson(root, 1)
     val mf = avro(Json.str(Json.list(meta, "snapshots").head,
       "manifest-list").get).head.get("manifest_path").toString
     val vals = avro(mf).map(_.get("data_file").asInstanceOf[GenericRecord]
       .get("partition").asInstanceOf[GenericRecord].get("p").toString).toSet
-    assert(vals === Set("a:b", "c d"))
+    assert(vals === Set("a:b", "c d", "a%b", "k=v"))
     assert(rows(IcebergRead.read(spark, root)) ===
-      Set((1L, "a:b", 1L), (2L, "c d", 2L)))
+      Set((1L, "a:b", 1L), (2L, "c d", 2L), (4L, "a%b", 4L), (5L, "k=v", 5L)))
 
     // a NULL partition value refuses by name
     val e1 = intercept[Exception] {
